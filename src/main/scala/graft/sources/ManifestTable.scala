@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** Versioned-manifest commits — the transactional close of the T7
@@ -18,17 +18,27 @@ import org.apache.spark.sql.types.StructType
   *
   * Layout under `baseDir/`:
   *   - `<table>/data/<txn>-<uuid>/part-*.parquet` — data files,
-  *     written FIRST, invisible until referenced by a manifest;
+  *     written FIRST, invisible until referenced by a manifest. Tasks
+  *     write them directly into the fresh txn dir ([[ManifestWrite]]):
+  *     there is no `_temporary` staging, no rename at task or job
+  *     commit, and no `_SUCCESS` marker;
   *   - `_log/v00000000001` … — one small manifest file per commit:
   *     `txn:<id>` (idempotence key), `add:<table>/…` file references,
   *     `snap:<table>` markers (this version REPLACES that table's
   *     contents with its own adds — snapshot semantics for state
-  *     tables), and an optional one-line `state:` payload.
+  *     tables), and an optional one-line `state:` payload. The
+  *     `add:`/`rows:`/`stats:` lines list exactly the files the write
+  *     tasks reported at task commit (with the row counts and stats
+  *     they read from the footers), never a directory listing — so a
+  *     file left by a lost or speculative task attempt is never
+  *     referenced.
   *
   * The commit point is a single Hadoop `rename` of the manifest into
   * `_log/` — atomic on HDFS and local FS. Crash before the rename ⇒
   * orphan data files that no reader ever sees (reclaimed by
-  * [[vacuum]]); crash after ⇒ the commit is complete, and re-running
+  * [[vacuum]], which also drops unreferenced files inside referenced
+  * dirs); a write that FAILS deletes its call's txn dirs itself.
+  * Crash after the rename ⇒ the commit is complete, and re-running
   * the same `txnId` is a recorded no-op. Because every table touched
   * by a sync rides in the SAME manifest, "some sinks advanced but not
   * the watermark" can no longer happen — the whole sync is one rename.
@@ -338,6 +348,12 @@ object ManifestTable {
     * — crash-rerun cannot double-apply, and no subset of the tables
     * can ever be visible without the rest.
     *
+    * Every table's write is in flight at once. If one throws, the
+    * others are cancelled and waited for down to their last task, the
+    * call's txn dirs are deleted and the first error is rethrown — the
+    * log is untouched, nothing of the call lands later, and the same
+    * `txnId` can simply be re-run.
+    *
     * `beforeCommit` is a test seam: it runs after all data files are
     * durable but before the manifest rename (the crash window the
     * protocol closes). Production callers leave the default. */
@@ -384,68 +400,13 @@ object ManifestTable {
     schemaGate(log)
 
     // 1. Data files first — invisible until a manifest references them.
+    // Each entry writes into its own fresh txn dir, named up front so a
+    // failed call knows every dir it may have created.
     val safeTxn = txnId.replaceAll("[^A-Za-z0-9._-]", "_")
-    def writeOut(table: String, df: DataFrame)
-        : (Seq[String], Long, Map[String, String], Map[String, Long]) = {
-      val rel = s"$table/$DataDir/$safeTxn-${java.util.UUID.randomUUID()}"
-      df.write.mode(SaveMode.ErrorIfExists).parquet(s"$baseDir/$rel")
-      val (fs, dataPath) = fsAndPath(spark, s"$baseDir/$rel")
-      val files = fs.listStatus(dataPath).toSeq.map(_.getPath)
-        .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      // A zero-PARTITION frame (emptyRDD) writes no parquet files at
-      // all — committing it would durably truncate a snapshot table to
-      // "no data, no schema". Fail before the manifest lands, like the
-      // schema-infer error the old read-back count surfaced. (A 0-ROW
-      // frame with ≥1 partition still writes a schema-bearing file and
-      // commits fine.)
-      require(files.nonEmpty,
-        s"refusing to commit $table from a frame that produced no parquet " +
-          "files (zero partitions) — repartition(1) an intentionally empty frame")
-      // Row counts AND per-file column min/max from the parquet footers
-      // we just wrote — driver-side metadata reads, not a second Spark
-      // scan job per table. The stats ride in the manifest so reads can
-      // skip whole files under a predicate (the 100 TB scan win).
-      val conf = spark.sessionState.newHadoopConf()
-      var n = 0L
-      val rowsB = Map.newBuilder[String, Long]
-      val stats = files.flatMap { f =>
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
-        val (cnt, footer) =
-          try (r.getRecordCount, r.getFooter) finally r.close()
-        n += cnt
-        rowsB += (s"$rel/${f.getName}" -> cnt)
-        footerStatsJson(footer).map(j => s"$rel/${f.getName}" -> j)
-      }.toMap
-      (files.map(f => s"$rel/${f.getName}"), n, stats, rowsB.result())
-    }
-    // Independent tables write CONCURRENTLY (r19, guide §2.6): the
-    // per-table data files go to disjoint txn-scoped dirs, nothing is
-    // visible until the manifest references them below, and Spark's
-    // scheduler happily runs several write jobs at once — the commit
-    // protocol is unchanged, only the caller-side serialization of
-    // the write actions goes away (q446 pays 6 sequential write DAGs
-    // otherwise). Threads are bounded and the result map is rebuilt
-    // in deterministic key order.
-    val written: Map[String,
-        (Seq[String], Long, Map[String, String], Map[String, Long])] = {
-      val entries = (appends ++ snapshots).toSeq
-      if (entries.size <= 1)
-        entries.map { case (t, df) => t -> writeOut(t, df) }.toMap
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(entries.size, 4))
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutorService(pool)
-        try {
-          val futs = entries.map { case (t, df) =>
-            scala.concurrent.Future(t -> writeOut(t, df)) }
-          scala.concurrent.Await.result(
-            scala.concurrent.Future.sequence(futs),
-            scala.concurrent.duration.Duration.Inf).toMap
-        } finally pool.shutdown()
-      }
-    }
+    val entries = (appends ++ snapshots).toSeq.sortBy(_._1).map { case (t, df) =>
+      (t, df, s"$t/$DataDir/$safeTxn-${java.util.UUID.randomUUID()}") }
+    val written: Map[String, Seq[WrittenFile]] =
+      writeConcurrently(spark, baseDir, entries)
 
     // Per-file Bloom membership lines for the columns named in
     // `graft.manifest.bloomCols` (comma-separated; opt-in because it
@@ -466,7 +427,7 @@ object ManifestTable {
                 .contains(f.dataType) => f.name
         }.toSeq
         if (eligible.isEmpty) Nil
-        else fileBloomLines(spark, baseDir, written(t)._1, eligible)
+        else fileBloomLines(spark, baseDir, written(t).map(_.path), eligible)
       }
     }
 
@@ -484,11 +445,7 @@ object ManifestTable {
     fs.mkdirs(logPath)
     val body = (Seq(s"txn:$txnId") ++
       snapshots.keys.toSeq.sorted.map(t => s"snap:$t") ++
-      written.toSeq.sortBy(_._1).flatMap(_._2._1).map(f => s"add:$f") ++
-      written.toSeq.sortBy(_._1).flatMap(_._2._3.toSeq.sortBy(_._1))
-        .map { case (f, j) => s"stats:$f\t$j" } ++
-      written.toSeq.sortBy(_._1).flatMap(_._2._4.toSeq.sortBy(_._1))
-        .map { case (f, c) => s"rows:$f\t$c" } ++
+      fileLines(written.toSeq.sortBy(_._1).flatMap(_._2)) ++
       bloomLines ++
       // A schema line activates explicit-schema reads, so an APPEND may
       // stamp one only where that cannot regress: the table already
@@ -530,7 +487,115 @@ object ManifestTable {
     if (committed % ckptEvery == 0)
       try compact(spark, baseDir)
       catch { case scala.util.control.NonFatal(_) => () }
-    written.map { case (t, (_, n, _, _)) => t -> n }
+    written.map { case (t, files) => t -> files.map(_.rows).sum }
+  }
+
+  /** The `add:`, `stats:` and `rows:` lines of a manifest for files as
+    * their task commits reported them. */
+  private def fileLines(files: Seq[WrittenFile]): Seq[String] =
+    files.map(f => s"add:${f.path}") ++
+      files.flatMap(f => f.stats.map(j => s"stats:${f.path}\t$j")) ++
+      files.map(f => s"rows:${f.path}\t${f.rows}")
+
+  /** Write every `(table, frame, txn dir)` entry with
+    * [[ManifestWrite.write]], all in flight at once (one thread per
+    * entry: the dirs are disjoint and nothing is visible until the
+    * manifest references them, so the only limit is Spark's
+    * scheduler). If any write throws, no sibling write starts after
+    * that, the running ones are cancelled (again every 50 ms, so a job
+    * a sibling was still planning is cancelled too), and the call
+    * waits until every task those jobs launched has ended — a
+    * cancelled job ends at once, but its tasks only stop at their next
+    * kill check. Only then is every dir of `entries` deleted and the
+    * first error rethrown, so nothing of the call can land afterwards
+    * and a failed commit leaves no orphaned data. The task wait is
+    * bounded (60 s) so a wedged task cannot hang the error path; a
+    * file such a task still writes is unreferenced, invisible to
+    * reads and removed by [[vacuum]]. */
+  private def writeConcurrently(
+      spark: SparkSession,
+      baseDir: String,
+      entries: Seq[(String, DataFrame, String)]): Map[String, Seq[WrittenFile]] = {
+    if (entries.isEmpty) return Map.empty
+    val sc = spark.sparkContext
+    val tag = s"graft-commit-${java.util.UUID.randomUUID()}"
+    val tasks = new TaggedTasks(tag)
+    sc.addSparkListener(tasks)
+    val failed = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(entries.size)
+    val done = new java.util.concurrent.ExecutorCompletionService[
+      Option[(String, Seq[WrittenFile])]](pool)
+    val reason = "a sibling table's write failed"
+    try {
+      entries.foreach { case (t, df, rel) =>
+        done.submit { () =>
+          if (failed.get) None
+          else {
+            sc.addJobTag(tag)
+            try Some(t -> ManifestWrite.write(df, baseDir, rel))
+            finally sc.removeJobTag(tag)
+          }
+        }
+      }
+      var firstError: Option[Throwable] = None
+      var results = Seq.empty[(String, Seq[WrittenFile])]
+      var pending = entries.size
+      while (pending > 0) {
+        val f = if (firstError.isEmpty) done.take()
+          else done.poll(50, java.util.concurrent.TimeUnit.MILLISECONDS)
+        if (f == null) sc.cancelJobsWithTag(tag, reason)
+        else {
+          pending -= 1
+          try results ++= f.get()
+          catch { case e: java.util.concurrent.ExecutionException =>
+            if (firstError.isEmpty) {
+              firstError = Some(e.getCause)
+              failed.set(true)
+              sc.cancelJobsWithTag(tag, reason)
+            }
+          }
+        }
+      }
+      firstError.foreach { e =>
+        // Every sibling has returned, so every job of the tag has
+        // ended and launched its last task. Once the scheduler and the
+        // listener bus have caught up, `tasks` has seen every task
+        // start, and its count only falls. If they do not catch up in
+        // time, the bounded wait below is all that is left.
+        try org.apache.spark.sql.GraftSqlBridge.cancelAndDrain(sc, tag, reason)
+        catch { case scala.util.control.NonFatal(_) => () }
+        val deadline = System.nanoTime() + 60L * 1000000000L
+        while (tasks.running > 0 && System.nanoTime() < deadline) Thread.sleep(5)
+        entries.foreach { case (_, _, rel) =>
+          val (fs, dir) = fsAndPath(spark, s"$baseDir/$rel")
+          fs.delete(dir, true)
+        }
+        throw e
+      }
+      results.toMap
+    } finally {
+      pool.shutdown()
+      sc.removeSparkListener(tasks)
+    }
+  }
+
+  /** Counts the running tasks of the jobs tagged `tag`, from the
+    * scheduler's task start and end events. A task's end event is
+    * posted only after the task has stopped, so zero means none of
+    * them can still write a file. */
+  private final class TaggedTasks(tag: String)
+      extends org.apache.spark.scheduler.SparkListener {
+    private val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    private val count = new java.util.concurrent.atomic.AtomicInteger
+    def running: Int = count.get
+    override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+      if (Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+          .exists(_.split(",").contains(tag)))
+        e.stageIds.foreach(stages.add)
+    override def onTaskStart(e: org.apache.spark.scheduler.SparkListenerTaskStart): Unit =
+      if (stages.contains(e.stageId)) count.incrementAndGet()
+    override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+      if (stages.contains(e.stageId)) count.decrementAndGet()
   }
 
   /** A column's per-file value range: numeric (exact decimal) or
@@ -546,67 +611,6 @@ object ManifestTable {
 
   private def cmpBytes(a: Array[Byte], b: Array[Byte]): Int =
     java.util.Arrays.compareUnsigned(a, b)
-
-  /** Per-file `{"col":[min,max],...}` JSON from a parquet footer, for
-    * top-level PLAIN numeric columns (INT32/INT64/DOUBLE with no
-    * logical annotation — which covers the raw-long watermark idiom;
-    * annotated types like timestamps carry unit conventions the
-    * driver-side literal comparison must not guess at, and FLOAT is
-    * excluded because its shortest decimal repr does not order
-    * consistently against Spark's float→double-promoted comparisons —
-    * pruning on it could drop matching rows) and UTF8-annotated BINARY
-    * string columns (hex-encoded bytes — `"x<hex>"` — so arbitrary
-    * corpus strings survive the one-line manifest format; unsigned
-    * byte order matches Spark's UTF8_BINARY comparison exactly, so a
-    * `source = 'src5'` read prunes like a hive partition without the
-    * directory layout). A column whose stats are missing in ANY row
-    * group is dropped for the file; min/max cover non-null values,
-    * which is exactly what the null-rejecting comparison predicates
-    * prune against. Names are restricted to identifier characters so
-    * the JSON needs no quoting rules. Returns None when nothing
-    * qualifies. */
-  private def footerStatsJson(
-      footer: org.apache.parquet.hadoop.metadata.ParquetMetadata)
-      : Option[String] = {
-    import scala.jdk.CollectionConverters._
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    val chunks = footer.getBlocks.asScala.toSeq.flatMap(_.getColumns.asScala)
-      .groupBy(_.getPath.toDotString)
-      .filter { case (name, _) => name.matches("[A-Za-z0-9_]+") }
-    def statsOk(cc: org.apache.parquet.hadoop.metadata.ColumnChunkMetaData) =
-      cc.getStatistics != null && !cc.getStatistics.isEmpty &&
-        cc.getStatistics.hasNonNullValue
-    val cols = chunks.toSeq.sortBy(_._1).flatMap { case (name, ccs) =>
-      val numeric = ccs.forall { cc =>
-        val pt = cc.getPrimitiveType
-        Set(INT32, INT64, DOUBLE).contains(pt.getPrimitiveTypeName) &&
-          pt.getLogicalTypeAnnotation == null && statsOk(cc)
-      }
-      val string = !numeric && ccs.forall { cc =>
-        val pt = cc.getPrimitiveType
-        pt.getPrimitiveTypeName == BINARY &&
-          pt.getLogicalTypeAnnotation.isInstanceOf[
-            org.apache.parquet.schema.LogicalTypeAnnotation
-              .StringLogicalTypeAnnotation] && statsOk(cc)
-      }
-      if (numeric)
-        try { // NaN/Infinity float stats have no decimal form — skip col
-          val los = ccs.map(c => BigDecimal(c.getStatistics.genericGetMin.toString))
-          val his = ccs.map(c => BigDecimal(c.getStatistics.genericGetMax.toString))
-          Some(s""""$name":[${los.min},${his.max}]""")
-        } catch { case _: NumberFormatException => None }
-      else if (string) {
-        def bin(o: Any) =
-          o.asInstanceOf[org.apache.parquet.io.api.Binary].getBytes
-        def hex(b: Array[Byte]) = b.map(x => f"${x & 0xff}%02x").mkString
-        val ord = Ordering.fromLessThan[Array[Byte]](cmpBytes(_, _) < 0)
-        val lo = ccs.map(c => bin(c.getStatistics.genericGetMin)).min(ord)
-        val hi = ccs.map(c => bin(c.getStatistics.genericGetMax)).max(ord)
-        Some(s""""$name":["x${hex(lo)}","x${hex(hi)}"]""")
-      } else None
-    }
-    if (cols.isEmpty) None else Some(cols.mkString("{", ",", "}"))
-  }
 
   /** Decode one stats JSON line back to col → range. The format is
     * writer-controlled (identifier names, plain JSON numbers or
@@ -982,8 +986,34 @@ object ManifestTable {
       table: String,
       fromVersion: Long,
       toVersion: Long,
-      netOnly: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.functions.lit
+      netOnly: Boolean = false): DataFrame =
+    changeRows(spark, baseDir,
+      changeWindow(spark, baseDir, table, fromVersion, toVersion), netOnly)
+
+  /** What changed in `table` between its committed states as of
+    * `fromVersion` (exclusive; 0 = empty) and `toVersion` — the
+    * metadata half of [[tableChanges]], answered from the manifest log
+    * alone with no Spark job. `inserted`/`deleted` are the files live
+    * at B but not at A and the reverse (a file added and removed
+    * inside the window cancels); `insertedRows` is their exact row
+    * count from the `rows:` lines, None when any inserted file lacks
+    * one (pre-`rows:` commits); `schema` is the table's schema as of
+    * `toVersion`. */
+  final case class ChangeWindow(
+      table: String,
+      fromVersion: Long,
+      toVersion: Long,
+      inserted: Seq[String],
+      deleted: Seq[String],
+      insertedRows: Option[Long],
+      schema: Option[StructType])
+
+  def changeWindow(
+      spark: SparkSession,
+      baseDir: String,
+      table: String,
+      fromVersion: Long,
+      toVersion: Long): ChangeWindow = {
     require(fromVersion >= 0, s"fromVersion must be >= 0, got $fromVersion")
     require(toVersion > fromVersion,
       s"toVersion ($toVersion) must be after fromVersion ($fromVersion)")
@@ -1003,14 +1033,28 @@ object ManifestTable {
       if (fromVersion == 0L) Set.empty[String]
       else liveFiles(logAsOfFrom(fsL, full, ckpts, fromVersion), table).toSet
     val liveB = liveFiles(logB, table).toSet
-    val schemaB = latestSchema(logB, table)
-    val reader = schemaB.map(spark.read.schema).getOrElse(spark.read)
+    val inserted = (liveB -- liveA).toSeq.sorted
+    val rows = logB.flatMap(_.rows).toMap
+    val counts = inserted.map(rows.get)
+    ChangeWindow(table, fromVersion, toVersion, inserted,
+      (liveA -- liveB).toSeq.sorted,
+      if (counts.forall(_.isDefined)) Some(counts.flatten.sum) else None,
+      latestSchema(logB, table))
+  }
+
+  /** The rows of a [[changeWindow]], tagged as in [[tableChanges]]. */
+  def changeRows(
+      spark: SparkSession,
+      baseDir: String,
+      w: ChangeWindow,
+      netOnly: Boolean = false): DataFrame = {
+    import org.apache.spark.sql.functions.lit
+    val reader = w.schema.map(spark.read.schema).getOrElse(spark.read)
     def tagged(files: Seq[String], t: String): Option[DataFrame] =
       if (files.isEmpty) None
       else Some(reader.parquet(files.map(f => s"$baseDir/$f"): _*)
         .withColumn("_change_type", lit(t)))
-    (tagged((liveB -- liveA).toSeq.sorted, "insert"),
-      tagged((liveA -- liveB).toSeq.sorted, "delete")) match {
+    (tagged(w.inserted, "insert"), tagged(w.deleted, "delete")) match {
       case (Some(i), Some(d)) if netOnly =>
         val iRaw = i.drop("_change_type")
         val dRaw = d.drop("_change_type")
@@ -1020,7 +1064,7 @@ object ManifestTable {
       case (Some(i), Some(d)) => i.unionByName(d)
       case (Some(i), None) => i
       case (None, Some(d)) => d
-      case (None, None) => schemaB
+      case (None, None) => w.schema
         .map { s =>
           val withTag = StructType(s.fields :+
             org.apache.spark.sql.types.StructField("_change_type",
@@ -1029,8 +1073,8 @@ object ManifestTable {
             spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], withTag)
         }
         .getOrElse(throw new java.io.FileNotFoundException(
-          s"$baseDir/$table changed no files in ($fromVersion, " +
-            s"$toVersion] and tracks no schema to shape an empty feed"))
+          s"$baseDir/${w.table} changed no files in (${w.fromVersion}, " +
+            s"${w.toVersion}] and tracks no schema to shape an empty feed"))
     }
   }
 
@@ -1192,11 +1236,12 @@ object ManifestTable {
       .getOrElse(spark.read)
     val survivors = reader.parquet(candidates.map(f => s"$baseDir/$f"): _*)
       .filter(coalesce(not(predicate), lit(true)))
-    val (adds, after) = writeRewrite(spark, baseDir, table, txnId, survivors)
+    val adds = writeRewrite(spark, baseDir, table, txnId, survivors)
     beforeCommit()
     if (!commitRewrite(spark, baseDir, txnId, log, candidates, adds,
         kind = "delete", table = table)) return None
-    Some(DeleteResult(before - after, candidates.length, kept.length))
+    Some(DeleteResult(before - adds.map(_.rows).sum, candidates.length,
+      kept.length))
   }
 
   /** Split `files` into (may hold a predicate match, provably cannot)
@@ -1475,39 +1520,28 @@ object ManifestTable {
   private def parquetRowCount(
       spark: SparkSession, paths: Seq[org.apache.hadoop.fs.Path]): Long = {
     val conf = spark.sessionState.newHadoopConf()
-    paths.map { f =>
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
-      try r.getRecordCount finally r.close()
-    }.sum
+    paths.map(ManifestWrite.readFooter(_, conf)._1).sum
   }
 
   /** Write `df` into a fresh txn-stamped data dir of `table` and
-    * collect (relative file paths + their stats lines, row count). A
-    * zero-ROW result is deleted and yields no adds — rewrite commits
-    * must never reference an empty rewrite. */
+    * return the reported files. A zero-ROW result is deleted and
+    * yields no files — rewrite commits must never reference an empty
+    * rewrite. */
   private def writeRewrite(
       spark: SparkSession,
       baseDir: String,
       table: String,
       txnId: String,
-      df: DataFrame): (Seq[(String, Option[String])], Long) = {
-    val conf = spark.sessionState.newHadoopConf()
+      df: DataFrame): Seq[WrittenFile] = {
     val safeTxn = txnId.replaceAll("[^A-Za-z0-9._-]", "_")
     val rel = s"$table/$DataDir/$safeTxn-${java.util.UUID.randomUUID()}"
-    df.write.mode(SaveMode.ErrorIfExists).parquet(s"$baseDir/$rel")
-    val (fs, dataPath) = fsAndPath(spark, s"$baseDir/$rel")
-    val newFiles = fs.listStatus(dataPath).toSeq.map(_.getPath)
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-    val n = parquetRowCount(spark, newFiles)
-    if (n == 0L) { fs.delete(dataPath, true); return (Nil, 0L) }
-    val adds = newFiles.map { f =>
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
-      val footer = try r.getFooter finally r.close()
-      (s"$rel/${f.getName}", footerStatsJson(footer))
+    val files = ManifestWrite.write(df, baseDir, rel)
+    if (files.exists(_.rows > 0)) files
+    else {
+      val (fs, dataPath) = fsAndPath(spark, s"$baseDir/$rel")
+      fs.delete(dataPath, true)
+      Nil
     }
-    (adds, n)
   }
 
   /** True iff manifest `m` writes table `table` in any way — adds or
@@ -1545,15 +1579,14 @@ object ManifestTable {
       txnId: String,
       log0: Seq[Manifest],
       removes: Seq[String],
-      adds: Seq[(String, Option[String])],
+      adds: Seq[WrittenFile],
       kind: String,
       table: String,
       schemaLine: Option[(String, String)] = None): Boolean = {
     var log = log0
     val body = (Seq(s"txn:$txnId") ++
       removes.map(f => s"remove:$f") ++
-      adds.map { case (f, _) => s"add:$f" } ++
-      adds.collect { case (f, Some(j)) => s"stats:$f\t$j" } ++
+      fileLines(adds) ++
       schemaLine.map { case (t, j) => s"schema:$t\t$j" })
       .mkString("", "\n", "\n")
     val (lfs, logPath) = fsAndPath(spark, s"$baseDir/$LogDir")
@@ -1660,7 +1693,7 @@ object ManifestTable {
       // partitions — no shuffle of data that is only changing files.
       case None => rows.coalesce(nOut)
     }
-    val (adds, _) = writeRewrite(spark, baseDir, table, txnId, shaped)
+    val adds = writeRewrite(spark, baseDir, table, txnId, shaped)
     if (!commitRewrite(spark, baseDir, txnId, log, small.map(_._1), adds,
         kind = "optimize", table = table)) return None
     Some(OptimizeResult(small.length, adds.length, bytesIn))
@@ -1703,11 +1736,11 @@ object ManifestTable {
         val survivors = reader
           .parquet(candidates.map(f => s"$baseDir/$f"): _*)
           .filter(coalesce(not(predicate), lit(true)))
-        val (adds, n) = writeRewrite(spark, baseDir, table, txnId, survivors)
-        (adds, n, before)
+        val adds = writeRewrite(spark, baseDir, table, txnId, survivors)
+        (adds, adds.map(_.rows).sum, before)
       }
-    val (dataAdds, inserted) = writeRewrite(spark, baseDir, table,
-      txnId + ".data", data)
+    val dataAdds = writeRewrite(spark, baseDir, table, txnId + ".data", data)
+    val inserted = dataAdds.map(_.rows).sum
     val schemaLine =
       if (latestSchema(log, table).isDefined || liveFiles(log, table).isEmpty)
         Some(table -> data.schema.json)
@@ -1773,15 +1806,15 @@ object ManifestTable {
         val survivors = reader
           .parquet(candidates.map(f => s"$baseDir/$f"): _*)
           .join(keys.distinct(), Seq(keyCol), "left_anti")
-        val (adds, n) = writeRewrite(spark, baseDir, table, txnId, survivors)
-        (adds, n, before)
+        val adds = writeRewrite(spark, baseDir, table, txnId, survivors)
+        (adds, adds.map(_.rows).sum, before)
       }
     // The delta lands as its own add set in the same manifest. An empty
     // delta frame still writes a schema-bearing file via commitMulti's
     // path — but here an empty delta means "pure delete of nothing";
     // writeRewrite drops zero-row output and that is correct.
-    val (deltaAdds, inserted) = writeRewrite(spark, baseDir, table,
-      txnId + ".delta", pinned)
+    val deltaAdds = writeRewrite(spark, baseDir, table, txnId + ".delta", pinned)
+    val inserted = deltaAdds.map(_.rows).sum
     // Stamp the delta's (possibly add-column-evolved) schema under the
     // same conditions commitMulti appends do — a schema-tracking table
     // must surface the new columns, and a brand-new table starts
@@ -1797,10 +1830,14 @@ object ManifestTable {
     Some(UpsertResult(before - survivorRows, inserted, candidates.length))
   }
 
-  /** Delete orphan data dirs under one table (written by a crashed
-    * commit, referenced by NO manifest — old snapshot versions stay,
-    * preserving time travel). Safe any time under the single-writer
-    * stance. Returns the number of directories removed. */
+  /** Delete orphan data under one table: whole data dirs that NO
+    * manifest references (written by a crashed or failed commit), and
+    * unreferenced parquet files inside referenced dirs (left by a lost
+    * or speculative task attempt, which writes straight into the txn
+    * dir but is never reported to the manifest). Files old manifest
+    * versions reference stay, preserving time travel. Safe any time
+    * under the single-writer stance. Returns the number of dirs plus
+    * stray files removed. */
   def vacuum(spark: SparkSession, baseDir: String, table: String): Int = {
     // Referenced = full raw history PLUS every checkpoint's live set.
     // Raw manifests keep pre-checkpoint time travel alive; after
@@ -1816,10 +1853,12 @@ object ManifestTable {
     if (!fs.exists(dataRoot)) return 0
     var removed = 0
     fs.listStatus(dataRoot).foreach { dir =>
-      val keep = fs.listStatus(dir.getPath).exists { f =>
-        referenced.contains(s"$table/$DataDir/${dir.getPath.getName}/${f.getPath.getName}")
-      }
-      if (!keep) { fs.delete(dir.getPath, true); removed += 1 }
+      val rel = s"$table/$DataDir/${dir.getPath.getName}"
+      val (live, stray) = fs.listStatus(dir.getPath).toSeq.map(_.getPath)
+        .filter(_.getName.endsWith(".parquet"))
+        .partition(f => referenced.contains(s"$rel/${f.getName}"))
+      if (live.isEmpty) { fs.delete(dir.getPath, true); removed += 1 }
+      else stray.foreach { f => fs.delete(f, false); removed += 1 }
     }
     removed
   }

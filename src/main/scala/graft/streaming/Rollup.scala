@@ -109,13 +109,29 @@ object Rollup {
     *
     *  1. reads the rollup base's recorded watermark (the last
     *     upstream version processed — 0 on first call),
-    *  2. pulls [[graft.sources.ManifestTable.tableChanges]] for the
-    *     window (watermark, upstream latest], net-diffed so rewrites
-    *     cost only their true row changes,
-    *  3. applies inserts positively and deletes NEGATIVELY to the
-    *     merged snapshot (a key whose count reaches zero leaves the
-    *     rollup — deletes downstream of a takedown propagate for
-    *     free), and
+    *  2. classifies the window (watermark, upstream latest] from
+    *     manifest metadata alone, with no Spark job
+    *     ([[graft.sources.ManifestTable.changeWindow]]: the files
+    *     added and removed for the table, and the exact inserted row
+    *     count from the `rows:` lines). A window that touched no file
+    *     of the table (only SIBLING tables of the upstream base), or
+    *     inserted zero rows and deleted nothing, advances the
+    *     watermark with a state-only commit — rewriting the whole
+    *     rollup snapshot for it would be O(rollup) write amplification
+    *     for nothing;
+    *  3. otherwise runs ONE aggregate over (current snapshot ∪ the
+    *     window's change rows, inserts signed +1 and deletes −1): a
+    *     key whose count reaches zero leaves the rollup, so deletes
+    *     downstream of a takedown propagate for free. An insert-only
+    *     window (the common append path) feeds its files' rows
+    *     straight in, with no pin and no probe. A window with deletes
+    *     comes from upstream rewrites ([[graft.sources.ManifestTable.deleteWhere]],
+    *     upsert, replace, optimize), which surface whole files as
+    *     delete + re-insert: its rows are net-diffed first, so the
+    *     sums only ever see true row changes (a floating-point sum
+    *     would otherwise drift by rounding on every rewrite), and a
+    *     window that nets to zero — an optimize, a no-op rewrite —
+    *     takes the state-only commit of step 2;
     *  4. commits the snapshot AND the advanced watermark in ONE txn
     *     sealed by the version window.
     *
@@ -127,11 +143,11 @@ object Rollup {
     *
     * One consumer per `rollupBase` (the watermark is the base dir's
     * state line, [[graft.sources.ManifestTable.lastState]]). Upstream
-    * compact+truncate maintenance is safe: tableChanges reconstructs
-    * either side of the window from the latest checkpoint at or below
-    * it, and fails loudly (never silently skips) only when the
-    * watermark predates the oldest checkpoint — i.e. the consumer
-    * stalled across an entire retention cycle. */
+    * compact+truncate maintenance is safe: the window reconstructs
+    * either side from the latest checkpoint at or below it, and fails
+    * loudly (never silently skips) only when the watermark predates
+    * the oldest checkpoint — i.e. the consumer stalled across an
+    * entire retention cycle. */
   def syncFromChanges(
       spark: org.apache.spark.sql.SparkSession,
       upstreamBase: String,
@@ -140,43 +156,51 @@ object Rollup {
       sumCols: Seq[String],
       rollupBase: String,
       rollupTable: String): Option[(Long, Long)] = {
+    import graft.sources.ManifestTable
     require(keyCols.nonEmpty, "need at least one key column")
-    val toV = graft.sources.ManifestTable.latestVersion(spark, upstreamBase)
-    val fromV = graft.sources.ManifestTable.lastState(spark, rollupBase)
+    val toV = ManifestTable.latestVersion(spark, upstreamBase)
+    val fromV = ManifestTable.lastState(spark, rollupBase)
       .map(_.toLong).getOrElse(0L)
     if (toV <= fromV) return None
-    // Pinned once: the emptiness probe below and the delta aggregate
-    // would otherwise each run the window's file scans and both
-    // exceptAll shuffles.
-    val changes = graft.operators.Dedup.truncate(
-      graft.sources.ManifestTable.tableChanges(
-        spark, upstreamBase, upstreamTable, fromV, toV, netOnly = true))
-    // A window that touched only SIBLING tables of the upstream base
-    // (or netted to zero) advances the watermark with a state-only
-    // commit — rewriting the whole rollup snapshot per unrelated
-    // upstream commit would be O(rollup) write amplification for
-    // nothing.
-    if (changes.isEmpty) {
-      graft.sources.ManifestTable.commitMulti(spark, rollupBase,
-        txnId = s"cdf-$upstreamTable-$fromV-$toV",
-        state = Some(toV.toString))
-      return Some((fromV, toV))
+    val txnId = s"cdf-$upstreamTable-$fromV-$toV"
+    val w = ManifestTable.changeWindow(spark, upstreamBase, upstreamTable, fromV, toV)
+    def stateOnly(): Option[(Long, Long)] = {
+      ManifestTable.commitMulti(spark, rollupBase, txnId, state = Some(toV.toString))
+      Some((fromV, toV))
     }
+    if (w.deleted.isEmpty && (w.inserted.isEmpty || w.insertedRows.contains(0L)))
+      return stateOnly()
+    val changes =
+      if (w.deleted.isEmpty) ManifestTable.changeRows(spark, upstreamBase, w)
+      else {
+        // Pinned once: the emptiness probe and the aggregate would
+        // otherwise each run the window's scans and both exceptAll
+        // shuffles.
+        val net = graft.operators.Dedup.truncate(
+          ManifestTable.changeRows(spark, upstreamBase, w, netOnly = true))
+        if (net.isEmpty) return stateOnly()
+        net
+      }
     val sign = when(col("_change_type") === "insert", lit(1L))
       .otherwise(lit(-1L))
     val sumNames = sumCols.map(c => s"sum_$c")
-    val delta = changes.groupBy(keyCols.map(col): _*)
+    // The snapshot's schema: the per-window delta aggregate's (resolved
+    // only, never run), so the signed rows and the merge below keep
+    // exactly the column types the rollup has always had.
+    val deltaSchema = changes.groupBy(keyCols.map(col): _*)
       .agg(sum(sign).as("n_rows"),
-        sumCols.map(c => sum(col(c) * sign).as(s"sum_$c")): _*)
-    val current = graft.sources.ManifestTable.read(
-      spark, rollupBase, rollupTable, schema = Some(delta.schema))
-    val merged = current.unionByName(delta)
+        sumCols.map(c => sum(col(c) * sign).as(s"sum_$c")): _*).schema
+    val signed = changes.select(keyCols.map(col) ++
+      (sign +: sumCols.map(c => col(c) * sign)).zip(deltaSchema.drop(keyCols.size))
+        .map { case (c, f) => c.cast(f.dataType).as(f.name) }: _*)
+    val current = ManifestTable.read(
+      spark, rollupBase, rollupTable, schema = Some(deltaSchema))
+    val merged = current.unionByName(signed)
       .groupBy(keyCols.map(col): _*)
       .agg(sum(col("n_rows")).as("n_rows"),
         sumNames.map(c => sum(col(c)).as(c)): _*)
       .filter(col("n_rows") > 0L)
-    graft.sources.ManifestTable.commitMulti(spark, rollupBase,
-      txnId = s"cdf-$upstreamTable-$fromV-$toV",
+    ManifestTable.commitMulti(spark, rollupBase, txnId,
       snapshots = Map(rollupTable -> merged),
       state = Some(toV.toString))
     Some((fromV, toV))

@@ -53,4 +53,29 @@ object GraftSqlBridge {
     spark.asInstanceOf[classic.SparkSession].sessionState.functionRegistry
       .registerFunction(
         org.apache.spark.sql.catalyst.FunctionIdentifier(name), info, builder)
+
+  /** The schema checks `df.write` makes before a file-format write
+    * that `FileFormatWriter.write` itself does not: no empty (or
+    * nested-empty) struct, and no duplicate column names under the
+    * session's case sensitivity. */
+  def checkWritableSchema(
+      spark: SparkSession, format: String, schema: types.StructType): Unit = {
+    val conf = spark.asInstanceOf[classic.SparkSession].sessionState.conf
+    execution.datasources.DataSource.validateSchema(format, schema, conf)
+    util.SchemaUtils.checkColumnNameDuplication(
+      schema.map(_.name), conf.caseSensitiveAnalysis)
+  }
+
+  /** Cancel every job tagged `tag`, then return once the scheduler has
+    * processed the cancellation and the listener bus has delivered
+    * every event posted before it. Task start events go through the
+    * scheduler's event loop in launch order, so a listener then has
+    * seen the start of every task a job of the tag launched before it
+    * ended. */
+  def cancelAndDrain(sc: org.apache.spark.SparkContext, tag: String, reason: String): Unit = {
+    scala.concurrent.Await.result(
+      sc.cancelJobsWithTagWithFuture(tag, reason),
+      scala.concurrent.duration.Duration(60, "s"))
+    sc.listenerBus.waitUntilEmpty()
+  }
 }

@@ -1101,4 +1101,147 @@ class ManifestTableSpec extends SparkSpec {
       spark.conf.unset("graft.manifest.bloomMaxFilesPerCommit")
     }
   }
+
+  /** Every file and dir name directly under `dir` (empty if absent). */
+  private def listing(dir: String): Set[String] = {
+    val d = new java.io.File(dir)
+    if (d.isDirectory) d.list().toSet else Set.empty
+  }
+
+  /** The parsed lines of one committed manifest version. */
+  private def manifestLines(base: String, v: Long): Seq[String] =
+    java.nio.file.Files.readAllLines(
+      java.nio.file.Paths.get(base, "_log", f"v$v%020d")).toArray.toSeq
+      .map(_.toString)
+
+  test("manifest-native write: add set = txn dir's parquet files; rows and " +
+      "stats are what the task commits read from the footers") {
+    import org.apache.spark.sql.functions._
+    val base = tmpBase()
+    // Empty middle partitions (ids 39..87 filtered out of 8 range
+    // partitions), and a record cap that makes the full partitions
+    // write several files each.
+    val df = spark.range(0L, 100L, 1L, 8)
+      .filter(col("id") < 39L || col("id") >= 88L)
+      .select(col("id"), (col("id") * 3L).as("v"),
+        concat(lit("s"), col("id").cast("string")).as("s"))
+    spark.conf.set("spark.sql.files.maxRecordsPerFile", "4")
+    try assert(ManifestTable.commit(df, base, "t", "txn-1") == df.count())
+    finally spark.conf.unset("spark.sql.files.maxRecordsPerFile")
+    val lines = manifestLines(base, 1L)
+    val adds = lines.collect { case l if l.startsWith("add:") => l.drop(4) }
+    val dirs = adds.map(_.split('/').dropRight(1).mkString("/")).distinct
+    assert(dirs.size == 1)
+    val onDisk = listing(s"$base/${dirs.head}")
+    // No staging dir, no job-commit marker: only the reported files
+    // (and their local-FS checksums).
+    assert(onDisk.forall(n => n.endsWith(".parquet") || n.endsWith(".crc")))
+    assert(adds.map(_.split('/').last).toSet ==
+      onDisk.filter(_.endsWith(".parquet")))
+    assert(adds.size > 8, "the record cap must split partitions into several files")
+    val rows = lines.collect { case l if l.startsWith("rows:") =>
+      val Array(f, n) = l.drop(5).split('\t'); f -> n.toLong }.toMap
+    assert(rows.keySet == adds.toSet)
+    assert(rows.values.sum == ManifestTable.read(spark, base, "t").count())
+    assert(rows.values.sum == 51L)
+    val stats = lines.collect { case l if l.startsWith("stats:") =>
+      val i = l.indexOf('\t'); l.slice(6, i) -> l.drop(i + 1) }.toMap
+    val conf = spark.sessionState.newHadoopConf()
+    adds.foreach { f =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(s"$base/$f"), conf))
+      val footer = try r.getFooter finally r.close()
+      assert(stats.get(f) == ManifestWrite.footerStatsJson(footer), f)
+    }
+    // The files are the ones `df.write.parquet` makes: same parquet
+    // schema and Spark row metadata.
+    val ref = tmpBase() + "/ref"
+    df.write.parquet(ref)
+    def footerOf(p: String) = {
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(p), conf))
+      try r.getFooter.getFileMetaData finally r.close()
+    }
+    val mine = footerOf(s"$base/${adds.head}")
+    val theirs = footerOf(listing(ref).filter(_.endsWith(".parquet"))
+      .map(n => s"$ref/$n").head)
+    assert(mine.getSchema == theirs.getSchema)
+    val rowMeta = "org.apache.spark.sql.parquet.row.metadata"
+    assert(mine.getKeyValueMetaData.get(rowMeta) ==
+      theirs.getKeyValueMetaData.get(rowMeta))
+    // The writer keeps df.write's checks: a duplicate column refuses
+    // before anything is written.
+    intercept[org.apache.spark.sql.AnalysisException] {
+      ManifestTable.commit(spark.range(3).select(col("id"), col("id")),
+        base, "dup", "txn-dup")
+    }
+    assert(!new java.io.File(s"$base/dup").exists())
+  }
+
+  test("a failed multi-table commit cancels its sibling writes and leaves " +
+      "no orphan dirs; the same txn then commits cleanly") {
+    import org.apache.spark.sql.functions._
+    val base = tmpBase()
+    val tables = (1 to 5).map(i => s"t$i")
+    ManifestTable.commit(spark.range(5).toDF("id"), base, "t1", "seed")
+    // Each sibling is one task of 2..5 rows; every row after the first
+    // is 300 ms of busy work that swallows the cancel's interrupt (as
+    // code that catches InterruptedException does), and the record cap
+    // below gives every row its own file. Whenever the bad frame fails
+    // — at once, or when the shortest sibling frees a core — the other
+    // siblings are inside a slow row: cancelled, they finish it and
+    // open a new file for it before their next kill check, as a late
+    // task does.
+    val slow = udf { (x: Long) =>
+      val t0 = System.nanoTime()
+      if (x > 0L) while (System.nanoTime() - t0 < 300000000L) {}
+      Thread.interrupted()
+      x
+    }
+    val good = tables.init.zipWithIndex.map { case (t, i) =>
+      t -> spark.range(0L, i + 2L, 1L, 1).select(slow(col("id")).as("id")) }
+    val bad = "t5" -> spark.range(0L, 10L, 1L, 1).select(
+      when(col("id") === 7L, raise_error(lit("boom"))).otherwise(col("id")).as("id"))
+    def dataDirs() = tables.map(t => t -> listing(s"$base/$t/data")).toMap
+    val dirsBefore = dataDirs()
+    val logBefore = listing(s"$base/_log")
+    spark.conf.set("spark.sql.files.maxRecordsPerFile", "1")
+    val e = try intercept[Exception] {
+      ManifestTable.commitMulti(spark, base, "multi", appends = (good :+ bad).toMap)
+    } finally spark.conf.unset("spark.sql.files.maxRecordsPerFile")
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(x => String.valueOf(x.getMessage).contains("boom")))
+    assert(dataDirs() == dirsBefore)
+    assert(listing(s"$base/_log") == logBefore)
+    // The call returned only after every task it launched had ended:
+    // nothing re-creates a dir later.
+    Thread.sleep(1000)
+    assert(dataDirs() == dirsBefore)
+    val ok = ManifestTable.commitMulti(spark, base, "multi",
+      appends = tables.map(t => t -> spark.range(0L, 10L, 1L, 2).toDF("id")).toMap)
+    assert(ok == tables.map(_ -> 10L).toMap)
+    assert(ManifestTable.read(spark, base, "t1").count() == 15L)
+    assert(ManifestTable.committedTxns(spark, base) == Set("seed", "multi"))
+  }
+
+  test("vacuum removes a stray parquet file inside a referenced txn dir") {
+    val base = tmpBase()
+    ManifestTable.commit(spark.range(0L, 20L, 1L, 2).toDF("id"), base, "t", "txn-1")
+    ManifestTable.commit(spark.range(20L, 30L, 1L, 1).toDF("id"), base, "t", "txn-2")
+    val live = ManifestTable.read(spark, base, "t").inputFiles.toSet
+    val expect = ManifestTable.read(spark, base, "t").as[Long].collect().sorted.toSeq
+    // What a lost task attempt leaves behind: a complete parquet file
+    // the manifest never referenced, next to the referenced ones.
+    val src = new java.io.File(new java.net.URI(live.head))
+    val stray = new java.io.File(src.getParentFile, "part-99999-stray.parquet")
+    java.nio.file.Files.copy(src.toPath, stray.toPath)
+    assert(ManifestTable.read(spark, base, "t").as[Long].collect().sorted.toSeq == expect)
+    assert(ManifestTable.vacuum(spark, base, "t") == 1)
+    assert(!stray.exists())
+    assert(live.forall(f => new java.io.File(new java.net.URI(f)).exists()))
+    assert(ManifestTable.read(spark, base, "t").as[Long].collect().sorted.toSeq == expect)
+    assert(ManifestTable.vacuum(spark, base, "t") == 0)
+  }
 }

@@ -427,23 +427,29 @@ class RollupSpec extends SparkSpec {
               org.apache.spark.sql.types.LongType),
             org.apache.spark.sql.types.StructField("sum_v",
               org.apache.spark.sql.types.LongType)))))
+        .select("src", "n_rows", "sum_v")
         .as[(String, Long, Long)].collect()
         .map(r => r._1 -> (r._2, r._3)).toMap
+    // The floating-point sum, compared bit for bit across a rewrite.
+    def sumW(): Map[String, Long] =
+      ManifestTable.read(spark, dn, "by_src").select("src", "sum_w")
+        .as[(String, Double)].collect()
+        .map(r => r._1 -> java.lang.Double.doubleToRawLongBits(r._2)).toMap
     def sync(): Option[(Long, Long)] = Rollup.syncFromChanges(
-      spark, up, "docs", Seq("src"), Seq("v"), dn, "by_src")
+      spark, up, "docs", Seq("src"), Seq("v", "w"), dn, "by_src")
 
     // Nothing upstream yet: no-op.
     assert(sync().isEmpty)
     // v1: two sources land.
-    ManifestTable.commit(Seq((1L, "a", 10L), (2L, "a", 20L), (3L, "b", 5L))
-      .toDF("id", "src", "v").repartition(1), up, "docs", "t1")
+    ManifestTable.commit(Seq((1L, "a", 10L, 0.1), (2L, "a", 20L, 0.2), (3L, "b", 5L, 0.3))
+      .toDF("id", "src", "v", "w").repartition(1), up, "docs", "t1")
     assert(sync().contains((0L, 1L)))
     assert(rollup() == Map("a" -> ((2L, 30L)), "b" -> ((1L, 5L))))
     // Caught up: replay is a no-op (watermark advanced with the data).
     assert(sync().isEmpty)
     // v2 append + v3 takedown of doc 1: one poll absorbs both; the
     // delete propagates and source b's key leaves the rollup.
-    ManifestTable.commit(Seq((4L, "a", 7L)).toDF("id", "src", "v")
+    ManifestTable.commit(Seq((4L, "a", 7L, 0.7)).toDF("id", "src", "v", "w")
       .repartition(1), up, "docs", "t2")
     assert(ManifestTable.deleteWhere(spark, up, "docs",
       col("src") === "b", "del-b").map(_.deletedRows).contains(1L))
@@ -462,5 +468,36 @@ class RollupSpec extends SparkSpec {
       .inputFiles.toSet == filesBefore)
     assert(rollup() == Map("a" -> ((3L, 37L))))
     assert(sync().isEmpty)
+    // An upstream optimize rewrites files (delete + re-insert of the
+    // same rows): the window nets to zero, so it commits state-only —
+    // the snapshot files and the Double sum stay bit for bit.
+    ManifestTable.commit(Seq((5L, "a", 1L, 0.01)).toDF("id", "src", "v", "w")
+      .repartition(1), up, "docs", "t5")
+    assert(sync().contains((4L, 5L)))
+    assert(rollup() == Map("a" -> ((4L, 38L))))
+    assert(math.abs(java.lang.Double.longBitsToDouble(sumW()("a")) - 1.01) < 1e-9)
+    val filesAtV5 = ManifestTable.read(spark, dn, "by_src").inputFiles.toSet
+    val wAtV5 = sumW()
+    assert(ManifestTable.optimize(spark, up, "docs", "opt-1")
+      .exists(_.filesCompacted >= 2))
+    assert(sync().contains((5L, 6L)))
+    assert(rollup() == Map("a" -> ((4L, 38L))))
+    assert(sumW() == wAtV5)
+    assert(ManifestTable.read(spark, dn, "by_src").inputFiles.toSet == filesAtV5)
+    // An append of a zero-row frame is classified from its `rows:`
+    // line: state-only commit, snapshot files untouched, watermark on.
+    val filesAtV6 = ManifestTable.read(spark, dn, "by_src").inputFiles.toSet
+    ManifestTable.commit(Seq.empty[(Long, String, Long, Double)].toDF("id", "src", "v", "w"),
+      up, "docs", "t-empty")
+    assert(sync().contains((6L, 7L)))
+    assert(ManifestTable.read(spark, dn, "by_src").inputFiles.toSet == filesAtV6)
+    assert(ManifestTable.lastState(spark, dn).contains("7"))
+    assert(rollup() == Map("a" -> ((4L, 38L))))
+    assert(sync().isEmpty)
+    // The one-aggregate merge keeps the rollup's column types.
+    import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
+    assert(ManifestTable.schemaOf(spark, dn, "by_src").map(_.map(f => f.name -> f.dataType))
+      .contains(Seq("src" -> StringType, "n_rows" -> LongType, "sum_v" -> LongType,
+        "sum_w" -> DoubleType)))
   }
 }
