@@ -31,6 +31,19 @@ import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
   */
 object SeriesKernels {
 
+  /** Most pair terms one kernel call materializes (~80 MB of long[]):
+    * the requires below fire BEFORE allocation pressure does. */
+  val MaxPairs: Long = 10000000L
+
+  /** Longest series whose n(n−1)/2 pair census fits [[MaxPairs]]
+    * (4472): the `maxN` bound of the one-series operators. */
+  val MaxSeriesN: Int = ((1 + math.sqrt(1 + 8.0 * MaxPairs)) / 2).toInt
+
+  /** Longest arm whose n_a·n_b two-arm product fits [[MaxPairs]] when
+    * both arms are full (3162): the `maxN` bound of the two-arm
+    * operators. */
+  val MaxArmN: Int = math.sqrt(MaxPairs.toDouble).toInt
+
   /** Spark's Round(double, 0) evaluation, bit-for-bit:
     * BigDecimal.valueOf (shortest-repr) → HALF_UP → toDouble, then
     * the long cast truncates the (already integral) double. */
@@ -59,12 +72,9 @@ object SeriesKernels {
       val n = vs.length
       if (n < 2) return null
       val m = n.toLong * (n - 1) / 2
-      // The operators bound n by maxN upstream; fail loud rather than
-      // wrap the allocation if a caller ever unbounds it. 1e7 pairs
-      // (~80 MB of long[]) keeps the require firing BEFORE allocation
-      // pressure does (r18 ADVICE) — the gate grid tops out at
-      // maxN = 512 ≈ 131k pairs, two orders of magnitude below.
-      require(m <= 10000000L,
+      // The operators bound n by maxN ≤ MaxSeriesN upstream; fail loud
+      // rather than wrap the allocation if a caller ever unbounds it.
+      require(m <= MaxPairs,
         s"mann_kendall_stats: series of $n points expands to $m pairs; " +
           "truncate with a smaller maxN")
       val slopes = new Array[Long](m.toInt)
@@ -142,7 +152,7 @@ object SeriesKernels {
       require(xs.length == ys.length,
         s"theil_sen_stats: xs/ys length mismatch (${xs.length} vs " +
           s"${ys.length})")
-      require(n.toLong * (n - 1) / 2 <= 10000000L,
+      require(n.toLong * (n - 1) / 2 <= MaxPairs,
         s"theil_sen_stats: series of $n points expands to " +
           s"${n.toLong * (n - 1) / 2} pairs; truncate with a smaller maxN")
       var np = 0
@@ -301,7 +311,7 @@ object SeriesKernels {
       val nb = vb.length
       if (na == 0 || nb == 0) return null
       val m = na.toLong * nb
-      require(m <= 10000000L,
+      require(m <= MaxPairs,
         s"hodges_lehmann_stats: arms of $na × $nb expand to $m " +
           "differences; truncate with a smaller maxN")
       val diffs = new Array[Long](m.toInt)
@@ -371,7 +381,7 @@ object SeriesKernels {
       val et = elemType
       val n = ids.numElements()
       val nPairs = n.toLong * (n - 1) / 2
-      require(nPairs <= 10000000L,
+      require(nPairs <= MaxPairs,
         s"self_pairs_ordered: bucket of $n ids would expand to " +
           s"$nPairs pairs; cap the bucket upstream")
       val out = new Array[Any](nPairs.toInt)

@@ -65,31 +65,6 @@ object Dedup {
     }
   }
 
-  /** JVM comparator matching Spark's column order for the id types
-    * whose order is PROVABLY identical on both sides — integrals
-    * naturally, strings via UTF8String's unsigned-byte comparator
-    * (java.lang.String.compareTo is UTF-16 code-unit order, which
-    * diverges on supplementary characters). None for anything else:
-    * driver fast paths must fall back to the distributed plan. */
-  private[graft] def idComparator(
-      dt: org.apache.spark.sql.types.DataType)
-      : Option[java.util.Comparator[Any]] = dt match {
-    case org.apache.spark.sql.types.LongType |
-         org.apache.spark.sql.types.IntegerType |
-         org.apache.spark.sql.types.ShortType |
-         org.apache.spark.sql.types.ByteType |
-         org.apache.spark.sql.types.BooleanType =>
-      Some((a: Any, b: Any) =>
-        a.asInstanceOf[Comparable[Any]].compareTo(b))
-    case org.apache.spark.sql.types.StringType =>
-      Some((a: Any, b: Any) =>
-        org.apache.spark.unsafe.types.UTF8String
-          .fromString(a.asInstanceOf[String])
-          .compareTo(org.apache.spark.unsafe.types.UTF8String
-            .fromString(b.asInstanceOf[String])))
-    case _ => None
-  }
-
   /** Exact dedup: canonical survivor per identical text = min(id).
     * One hash-aggregate shuffle on the digest. */
   def exact(docs: DataFrame, idCol: String, textCol: String): DataFrame =
@@ -419,10 +394,10 @@ object Dedup {
     *
     * Output: (id, component) — component = min node id reachable.
     *
-    * `maxIter` applies only to the DISTRIBUTED fixpoint: graphs at or
-    * under `driverCap` rows are solved exactly by the driver
-    * union-find, which always converges — the non-convergence throw
-    * below is reachable only above the cap (r18 ADVICE note). */
+    * `maxIter` applies only to the DISTRIBUTED fixpoint: graphs that
+    * [[DriverFold]] admits (at most `driverCap` rows, no NULL ids, a
+    * value-safe id type) are solved exactly by the driver union-find,
+    * which always converges. */
   def connectedComponents(
       edges: DataFrame,
       aCol: String,
@@ -441,31 +416,11 @@ object Dedup {
     val sym = truncate(edges.select(col(aCol).as("x"), col(bCol).as("y"))
       .union(edges.select(col(bCol).as("x"), col(aCol).as("y")))
       .distinct())
-    // Guarded driver union-find (r18): each pointer-jump round costs
-    // ~5 jobs no matter how small the deduplicated graph is, and in
-    // the near-dup/linkage gates the edge set is pair-census sized —
-    // job overhead dominated the fixpoint. The MEASURED row count
-    // (sym is already pinned; the count is a cheap scan) bounds the
-    // driver work by construction; larger graphs keep the fixpoint
-    // unchanged (its convergence contract included). Only id types
-    // whose JVM order provably equals Spark's column order take the
-    // fast path — integral ids naturally, strings via UTF8String's
-    // unsigned-byte comparator (java.lang.String.compareTo is UTF-16
-    // code-unit order, which DIVERGES on supplementary characters).
-    val idOrd: Option[java.util.Comparator[Any]] =
-      idComparator(sym.schema("x").dataType)
-    // One gate pass over the pinned edges: row count AND a NULL
-    // census — NULL endpoints keep the distributed path, which
-    // tolerates them (a NULL id never joins; it surfaces as one
-    // (null, null) label row), where a driver comparator would NPE.
-    val takeFastPath = idOrd.isDefined && driverCap > 0L && {
-      val g = sym.agg(count(lit(1)).as("__n"),
-        coalesce(sum(when(col("x").isNull || col("y").isNull, 1L)
-          .otherwise(0L)), lit(0L)).as("__nulls")).collect()(0)
-      g.getLong(0) <= driverCap && g.getLong(1) == 0L
-    }
-    if (takeFastPath) {
-      val cmp = idOrd.get
+    // Driver union-find: each pointer-jump round costs ~5 jobs however
+    // small the graph is; the union-find always converges.
+    val fold = DriverFold(driverCap, DriverFold.Input(sym, Seq("x", "y")))
+    if (fold.isDefined) {
+      val cmp = fold.get.order
       val parent = new java.util.HashMap[Any, Any]()
       def find(v: Any): Any = {
         if (!parent.containsKey(v)) { parent.put(v, v); v }
@@ -479,7 +434,7 @@ object Dedup {
           r
         }
       }
-      sym.collect().foreach { row =>
+      fold.get.rows(0).foreach { row =>
         val ra = find(row.get(0))
         val rb = find(row.get(1))
         if (ra != rb) {

@@ -327,24 +327,12 @@ object Graph {
     // MATERIALIZED edges/nodes/outdeg CTEs).
     val e = Dedup.truncate(edges)
     val base0 = ((100L - dampingPct) * unit) / 100L
-    // Guarded driver fold (r19; the [[hits]] rationale): the exact
-    // floor-div mass split (rank div W)·w + ((rank mod W)·w) div W is
-    // non-negative Long arithmetic throughout — Spark `div` equals
-    // Java `/` there — and inflow sums are order-free. NULL endpoints
-    // keep the distributed path (a NULL src/dst silently drops out of
-    // the distributed flow joins; the fold's hash maps would route
-    // mass through it). Spec-pinned distributed agreement via
-    // driverCap = 0.
-    val takePrFold = driverCap > 0L &&
-      e.schema("__src").dataType == e.schema("__dst").dataType && {
-        val g = e.agg(count(lit(1)).as("__n"),
-          coalesce(sum(when(col("__src").isNull ||
-            col("__dst").isNull, 1L).otherwise(0L)), lit(0L))
-            .as("__nulls")).collect()(0)
-        g.getLong(0) <= driverCap && g.getLong(1) == 0L
-      }
-    if (takePrFold) {
-      val edgesL = e.collect().map(r =>
+    // Driver fold: the floor-div mass split (rank div W)·w +
+    // ((rank mod W)·w) div W is non-negative Long arithmetic — Spark
+    // `div` equals Java `/` there — and inflow sums are order-free.
+    val fold = DriverFold(driverCap, DriverFold.Input(e, Seq("__src", "__dst")))
+    if (fold.isDefined) {
+      val edgesL = fold.get.rows(0).map(r =>
         (r.get(0), r.get(1), r.getLong(2)))
       val nodesL: Array[Any] =
         (edgesL.map(_._1) ++ edgesL.map(_._2)).distinct
@@ -558,15 +546,11 @@ object Graph {
         greatest(col(srcCol), col(dstCol)).as("b"))
       .filter(col("a") =!= col("b"))
       .distinct())
-    // Guarded driver fold (r19; the [[hits]] rationale): peeling is
-    // pure integer degree counting over a shrinking edge set — no
-    // arithmetic to drift, no ordering needed. Early-exit and
-    // round-count semantics replicated exactly; spec-pinned
-    // distributed agreement via driverCap = 0.
-    if (driverCap > 0L &&
-        e.schema("a").dataType == e.schema("b").dataType &&
-        e.count() <= driverCap) {
-      var edgesL = e.collect().map(r => (r.get(0), r.get(1))).toSeq
+    // Driver fold: peeling is integer degree counting over a shrinking
+    // edge set; early exit and round count as in the loop below.
+    val fold = DriverFold(driverCap, DriverFold.Input(e, Seq("a", "b")))
+    if (fold.isDefined) {
+      var edgesL = fold.get.rows(0).map(r => (r.get(0), r.get(1))).toSeq
       var rounds = 0
       var removed = -1L
       def degreesOf(es: Seq[(Any, Any)])
@@ -649,15 +633,13 @@ object Graph {
     val e = Dedup.truncate(
       und.select(col("a").as("x"), col("b").as("y"))
         .union(und.select(col("b").as("x"), col("a").as("y"))))
-    // Guarded driver fold (r19; the [[labelSpread]] rationale —
-    // labels here ARE node ids, so the (−count, label) tie-break
-    // needs the id type order-provable via [[Dedup.idComparator]]).
-    // Early-exit and round-count semantics replicated exactly;
-    // spec-pinned distributed agreement via driverCap = 0.
-    val lpaOrd = Dedup.idComparator(e.schema("x").dataType)
-    if (driverCap > 0L && lpaOrd.isDefined && e.count() <= driverCap) {
-      val cmp = lpaOrd.get
-      val edgesL = e.collect().map(r => (r.get(0), r.get(1)))
+    // Driver fold: labels are node ids, so the (−count, label)
+    // tie-break takes the fold's order; early exit and round count as
+    // in the loop below.
+    val fold = DriverFold(driverCap, DriverFold.Input(e, Seq("x", "y")))
+    if (fold.isDefined) {
+      val cmp = fold.get.order
+      val edgesL = fold.get.rows(0).map(r => (r.get(0), r.get(1)))
       val nodesL: Array[Any] = edgesL.map(_._1).distinct
       var labM = new java.util.HashMap[Any, Any]()
       nodesL.foreach(n => labM.put(n, n))
@@ -785,18 +767,14 @@ object Graph {
     val sd = Dedup.truncate(
       seeds.select(col(seedCol).as("node")).filter(col("node").isNotNull)
         .distinct())
-    // Guarded driver fold (r19; the [[hits]] rationale): the per-round
-    // arithmetic is exact Long floor-divisions and sums over
-    // non-negative values — Spark's `div` truncates toward zero,
-    // which equals Java `/` on the non-negative ranks/degrees here —
-    // so the fold is bit-equal to the distributed rounds
-    // (spec-pinned via driverCap = 0).
-    if (driverCap > 0L &&
-        e.schema("__src").dataType == e.schema("__dst").dataType &&
-        e.schema("__src").dataType == sd.schema("node").dataType &&
-        e.count() <= driverCap && sd.count() <= driverCap) {
-      val edgesL = e.collect().map(r => (r.get(0), r.get(1)))
-      val seedsL = sd.collect().map(_.get(0))
+    // Driver fold: exact Long floor-divisions and sums over
+    // non-negative values, where Spark's `div` equals Java `/`.
+    val fold = DriverFold(driverCap,
+      DriverFold.Input(e, Seq("__src", "__dst")),
+      DriverFold.Input(sd, Seq("node")))
+    if (fold.isDefined) {
+      val edgesL = fold.get.rows(0).map(r => (r.get(0), r.get(1)))
+      val seedsL = fold.get.rows(1).map(_.get(0))
       val nodesL: Array[Any] =
         (edgesL.map(_._1) ++ edgesL.map(_._2) ++ seedsL).distinct
       val seedSet = new java.util.HashSet[Any]()
@@ -911,19 +889,11 @@ object Graph {
       edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"))
         .filter(col("__src").isNotNull && col("__dst").isNotNull)
         .distinct())
-    // Guarded driver fold (r19; the [[Dedup.connectedComponents]] r18
-    // discipline): each round of the distributed loop costs ~4 jobs
-    // of fixed overhead however small the pinned edge set is, and the
-    // arithmetic is exact unnormalized Long sums — order-free, so the
-    // fold is bit-equal (Java long addition wraps exactly like
-    // Spark's non-ANSI sum if a caller ever overflows `iters`). The
-    // MEASURED edge count bounds driver work by construction; bigger
-    // graphs keep the distributed rounds unchanged (spec-pinned via
-    // driverCap = 0).
-    if (driverCap > 0L &&
-        e.schema("__src").dataType == e.schema("__dst").dataType &&
-        e.count() <= driverCap) {
-      val edgesL = e.collect().map(r => (r.get(0), r.get(1)))
+    // Driver fold: unnormalized Long sums are order-free, and Java long
+    // addition wraps like Spark's non-ANSI sum if `iters` overflows.
+    val fold = DriverFold(driverCap, DriverFold.Input(e, Seq("__src", "__dst")))
+    if (fold.isDefined) {
+      val edgesL = fold.get.rows(0).map(r => (r.get(0), r.get(1)))
       val nodesL: Array[Any] =
         (edgesL.map(_._1) ++ edgesL.map(_._2)).distinct
       var hubM = new java.util.HashMap[Any, java.lang.Long]()
@@ -1032,20 +1002,15 @@ object Graph {
         .filter(col("node").isNotNull && col("__seed_label").isNotNull)
         .groupBy(col("node"))
         .agg(min(col("__seed_label")).as("__seed_label")))
-    // Guarded driver fold (r19; the [[hits]] rationale): the vote
-    // census is exact integer counting and the winner is the
-    // (−count, label) argmin — the label tie-break needs the same
-    // order-provable-type discipline as the r18 union-find, so only
-    // integral/string labels (via [[Dedup.idComparator]]) take the
-    // fast path, and only when seed and edge node types agree
-    // (spec-pinned distributed agreement via driverCap = 0).
-    val labelOrd = Dedup.idComparator(sd.schema("__seed_label").dataType)
-    if (driverCap > 0L && labelOrd.isDefined &&
-        e.schema("x").dataType == sd.schema("node").dataType &&
-        e.count() <= driverCap && sd.count() <= driverCap) {
-      val cmp = labelOrd.get
-      val edgesL = e.collect().map(r => (r.get(0), r.get(1)))
-      val seedL = sd.collect().map(r => (r.get(0), r.get(1)))
+    // Driver fold: the vote census is integer counting and the winner
+    // the (−count, label) argmin under the fold's order.
+    val fold = DriverFold(driverCap,
+      DriverFold.Input(e, Seq("x", "y")),
+      DriverFold.Input(sd, Seq("node"), labels = Seq("__seed_label")))
+    if (fold.isDefined) {
+      val cmp = fold.get.order
+      val edgesL = fold.get.rows(0).map(r => (r.get(0), r.get(1)))
+      val seedL = fold.get.rows(1).map(r => (r.get(0), r.get(1)))
       val nodesL: Array[Any] =
         (edgesL.map(_._1) ++ seedL.map(_._1)).distinct
       val isSeed = new java.util.HashSet[Any]()
@@ -1199,18 +1164,14 @@ object Graph {
     val sd0 = Dedup.truncate(
       seeds.select(col(seedCol).as("node")).filter(col("node").isNotNull)
         .distinct())
-    // Guarded driver fold (r19; the [[hits]] rationale): BFS is pure
-    // set algebra — no arithmetic to drift — and the level-
-    // synchronous loop costs ~4 jobs per hop distributed. Same loop
-    // contract as below, including the stats-mode early exit and its
-    // round count (spec-pinned distributed agreement via
-    // driverCap = 0).
-    if (driverCap > 0L &&
-        e.schema("__src").dataType == e.schema("__dst").dataType &&
-        e.schema("__src").dataType == sd0.schema("node").dataType &&
-        e.count() <= driverCap && sd0.count() <= driverCap) {
+    // Driver fold: BFS is set algebra; the stats-mode early exit and
+    // round count as in the loop below.
+    val fold = DriverFold(driverCap,
+      DriverFold.Input(e, Seq("__src", "__dst")),
+      DriverFold.Input(sd0, Seq("node")))
+    if (fold.isDefined) {
       val adj = new java.util.HashMap[Any, java.util.ArrayList[Any]]()
-      e.collect().foreach { r =>
+      fold.get.rows(0).foreach { r =>
         var l = adj.get(r.get(0))
         if (l == null) {
           l = new java.util.ArrayList[Any](); adj.put(r.get(0), l)
@@ -1219,7 +1180,7 @@ object Graph {
       }
       val settled =
         new java.util.LinkedHashMap[Any, java.lang.Integer]()
-      var frontierL: Array[Any] = sd0.collect().map(_.get(0))
+      var frontierL: Array[Any] = fold.get.rows(1).map(_.get(0))
       frontierL.foreach(n => settled.put(n, 0))
       var rounds = 0
       var grew = -1L

@@ -3291,7 +3291,9 @@ object Profile {
       sideCol: String,
       tieCol: String,
       maxN: Int = 512): DataFrame = {
-    require(maxN >= 1, "maxN must be at least 1")
+    require(maxN >= 1 && maxN <= graft.functions.SeriesKernels.MaxArmN,
+      s"maxN must be in [1, ${graft.functions.SeriesKernels.MaxArmN}]" +
+        " — it bounds the n_a·n_b pair census")
     val base = df.filter(col(valueCol).isNotNull)
       .select(col(groupCol).as("__g"),
         round(col(valueCol).cast("double") * lit(1e6)).cast("long")

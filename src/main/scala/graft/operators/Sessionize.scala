@@ -441,22 +441,16 @@ object Sessionize {
       .select(col("from_state"), col("to_state"),
         round(lit(1e6) * col("__c").cast("double") /
           col("__ct").cast("double")).cast("long").as("__p")))
-    // Guarded driver fold (r19; the [[Dedup.connectedComponents]] r18
-    // discipline): past the journey census EVERYTHING is model-sized
-    // — (channels+3)² transition rows drive iters rounds of value
-    // iteration whose distributed form costs ~3 jobs/round of pure
-    // overhead regardless of corpus size. The MEASURED census row
-    // count bounds driver work by construction (trans0 is pinned, the
-    // count is a cheap scan); a vocabulary-explosion census keeps the
-    // distributed fixpoint unchanged. The fold replicates the exact
-    // arithmetic: Long sums of micro×micro products (≤ 1e12 per term,
-    // model-sized sums — no overflow at the cap) and Spark's
+    // Driver fold: past the journey census everything is model-sized.
+    // It replicates the exact arithmetic: Long sums of micro×micro
+    // products (≤ 1e12 per term, no overflow at the cap) and Spark's
     // Round(double) via [[graft.functions.SeriesKernels.roundHalfUp]]
-    // per state per round — bit-equal to the distributed path, which
-    // the spec pins by running both.
-    if (driverCap > 0L && trans0.count() <= driverCap) {
+    // per state per round.
+    val fold = DriverFold(driverCap,
+      DriverFold.Input(trans0, Seq("from_state", "to_state")))
+    if (fold.isDefined) {
       val S0 = S; val C0 = C; val N0 = N
-      val edgesL = trans0.collect().map(r =>
+      val edgesL = fold.get.rows(0).map(r =>
         (r.getString(0), r.getString(1), r.getLong(2))).toSeq
       val chansL = edgesL.map(_._1).filter(_ != S0).distinct.sorted
       val variantsL = chansL :+ "(full)"

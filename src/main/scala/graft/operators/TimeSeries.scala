@@ -326,7 +326,9 @@ object TimeSeries {
       yCol: String,
       idCol: String,
       maxN: Int = 512): DataFrame = {
-    require(maxN >= 2, "maxN must be at least 2")
+    require(maxN >= 2 && maxN <= graft.functions.SeriesKernels.MaxSeriesN,
+      s"maxN must be in [2, ${graft.functions.SeriesKernels.MaxSeriesN}]" +
+        " — it bounds the quadratic pair census")
     // One bounded-heap aggregation collects each group's first-maxN
     // (x, y) series; slope census, slope median, residuals, and
     // intercept median all run as ONE in-task kernel over the
@@ -1610,7 +1612,9 @@ object TimeSeries {
       idCol: String,
       valueCol: String,
       maxN: Int = 512): DataFrame = {
-    require(maxN >= 2, "maxN must be at least 2")
+    require(maxN >= 2 && maxN <= graft.functions.SeriesKernels.MaxSeriesN,
+      s"maxN must be in [2, ${graft.functions.SeriesKernels.MaxSeriesN}]" +
+        " — it bounds the quadratic pair census")
     // One bounded-heap aggregation collects each key's first-maxN
     // series (state ≤ maxN rows/group, map-side combinable); the
     // whole quadratic pair census — S, tie correction, Sen's median —

@@ -111,47 +111,4 @@ object Sessionizer {
           out.iterator
       }
   }
-
-  /** Spark-4-native variant of [[sessions]] using `transformWithState`
-    * (the arbitrary-state API that replaces flatMapGroupsWithState:
-    * typed state variables, timers, RocksDB-backed, schema-evolvable).
-    * Same [[step]] semantics; streaming-only (transformWithState
-    * requires a streaming Dataset).
-    */
-  class SessionProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        String, StatusSample, CleaningHistory] {
-    @transient private var state:
-        org.apache.spark.sql.streaming.ValueState[SessionState] = _
-
-    override def init(
-        outputMode: OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit = {
-      state = getHandle.getValueState[SessionState](
-        "session",
-        org.apache.spark.sql.Encoders.product[SessionState],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-    }
-
-    override def handleInputRows(
-        key: String,
-        rows: Iterator[StatusSample],
-        timers: org.apache.spark.sql.streaming.TimerValues): Iterator[CleaningHistory] = {
-      val st = if (state.exists()) state.get() else SessionState.empty
-      val (out, next) = step(st, rows.toSeq)
-      state.update(next)
-      out.iterator
-    }
-  }
-
-  def sessionsTws(samples: Dataset[StatusSample])(
-      implicit spark: SparkSession): Dataset[CleaningHistory] = {
-    import spark.implicits._
-    samples
-      .groupByKey(_.deviceName)
-      .transformWithState(
-        new SessionProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Append())
-  }
 }

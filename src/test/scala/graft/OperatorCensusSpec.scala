@@ -50,6 +50,30 @@ class OperatorCensusSpec extends AnyFunSuite {
           s"$n in ${fs.mkString(", ")}" }.mkString("; ")}")
   }
 
+  test("driver-fold guards live only in DriverFold") {
+    // Nine operators once restated the fold decision, each with a
+    // different subset of its conditions; operators ask
+    // operators.DriverFold instead.
+    val guard = """driverCap\s*>\s*0""".r
+    def scalaFiles(d: java.io.File): Seq[java.io.File] =
+      d.listFiles.toSeq.flatMap(f =>
+        if (f.isDirectory) scalaFiles(f)
+        else if (f.getName.endsWith(".scala")) Seq(f) else Nil)
+    val sites = scalaFiles(new java.io.File("src/main"))
+      .filter(_.getName != "DriverFold.scala")
+      .flatMap { f =>
+        val src = new String(java.nio.file.Files.readAllBytes(f.toPath),
+          java.nio.charset.StandardCharsets.UTF_8)
+        src.linesIterator.zipWithIndex.collect {
+          case (l, i) if guard.findFirstIn(l).isDefined =>
+            s"${f.getName}:${i + 1}"
+        }
+      }
+    assert(sites.isEmpty,
+      s"hand-rolled driver-fold guard(s) — call DriverFold: " +
+        sites.mkString(", "))
+  }
+
   test("no same-file redefinition outside the overload allowlist") {
     val files = opsDir.listFiles.filter(_.getName.endsWith(".scala"))
     val dups = files.flatMap { f =>

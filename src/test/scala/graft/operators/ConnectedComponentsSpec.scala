@@ -35,13 +35,17 @@ class ConnectedComponentsSpec extends SparkSpec {
   }
 
   test("driver fast path and distributed fixpoint agree (longs and strings)") {
-    val edges = Seq((2L, 1L), (2L, 3L), (3L, 4L), (10L, 11L),
-      (20L, 20L)).toDF("a", "b")
-    val fast = Dedup.connectedComponents(edges, "a", "b")
-      .as[(Long, Long)].collect().toMap
-    val dist = Dedup.connectedComponents(edges, "a", "b", driverCap = 0L)
-      .as[(Long, Long)].collect().toMap
-    assert(fast == dist)
+    // Every id type agrees by value: Long and String ids take the
+    // union-find, Binary and Double (0.0 next to −0.0) ids fall back.
+    val pairs = Seq((2L, 1L), (2L, 3L), (3L, 4L), (10L, 11L), (20L, 20L),
+      (0L, 5L), (1L, 6L))
+    for ((dt, id) <- foldIdTypes) {
+      val typed = frame("a" -> dt, "b" -> dt)(
+        pairs.map { case (a, b) => Seq(id(a), id(b)) })
+      assert(byValue(Dedup.connectedComponents(typed, "a", "b")) ==
+        byValue(Dedup.connectedComponents(typed, "a", "b",
+          driverCap = 0L)), s"$dt ids")
+    }
     // String ids compare in UTF8 byte order on both paths.
     val sedges = Seq(("b", "a"), ("b", "c"), ("x", "y")).toDF("a", "b")
     val sfast = Dedup.connectedComponents(sedges, "a", "b")

@@ -321,65 +321,82 @@ class GraphSpec extends SparkSpec {
 
   test("iterative driver folds agree with the distributed rounds") {
     // driverCap = 0 pins the DISTRIBUTED loop (the at-scale path must
-    // stay exercised — the r18 connectedComponents spec discipline);
-    // the default cap takes the driver fold. Random directed graph
-    // with islands, cycles, and duplicate edges; every operator must
-    // agree row for row.
+    // stay exercised); the default cap takes the driver fold where
+    // DriverFold admits the id type. Random directed graph with
+    // islands, cycles, and duplicate edges, once per id type: Long and
+    // String ids fold, Binary and Double (0.0 next to −0.0) ids fall
+    // back. Every operator must agree row for row, compared by value.
+    import org.apache.spark.sql.types.{BinaryType, LongType}
     val rng = new scala.util.Random(13)
-    val edges = (1 to 300).map(_ =>
+    val pairs = (1 to 300).map(_ =>
       (rng.nextInt(40).toLong, rng.nextInt(40).toLong))
       .filter { case (a, b) => a != b }
-      .toDF("s", "d")
-    val seeds = Seq(1L, 3L, 99L).toDF("n")
-    val lseeds = Seq((1L, 7), (3L, 2), (99L, 5)).toDF("n", "l")
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(_.toString).sorted.toSeq
-    assert(rows(Graph.hits(edges, "s", "d", iters = 3)) ==
-      rows(Graph.hits(edges, "s", "d", iters = 3, driverCap = 0L)))
-    assert(rows(Graph.pageRankSeeded(edges, "s", "d", seeds, "n",
-        iters = 4)) ==
-      rows(Graph.pageRankSeeded(edges, "s", "d", seeds, "n",
-        iters = 4, driverCap = 0L)))
-    assert(rows(Graph.labelSpread(edges, "s", "d", lseeds, "n", "l",
-        iters = 4)) ==
-      rows(Graph.labelSpread(edges, "s", "d", lseeds, "n", "l",
-        iters = 4, driverCap = 0L)))
-    val (d1, r1) = Graph.hopDistanceConverged(edges, "s", "d", seeds,
-      "n", maxHops = 6)
-    val (d0, r0) = Graph.hopDistanceConverged(edges, "s", "d", seeds,
-      "n", maxHops = 6, driverCap = 0L)
-    assert(rows(d1) == rows(d0))
-    assert(r1 == r0)
-    assert(rows(Graph.pageRank(edges, "s", "d", iters = 3)) ==
-      rows(Graph.pageRank(edges, "s", "d", iters = 3, driverCap = 0L)))
-    import org.apache.spark.sql.functions.{col, lit, pmod}
-    val wedges = edges.withColumn("w",
-      pmod(col("s") * 7 + col("d"), lit(5)) + lit(1))
-    assert(rows(Graph.pageRankWeighted(wedges, "s", "d", "w",
-        iters = 3)) ==
-      rows(Graph.pageRankWeighted(wedges, "s", "d", "w", iters = 3,
-        driverCap = 0L)))
-    val (p1, pr1, m1) = Graph.pageRankConverged(edges, "s", "d",
-      iters = 4)
-    val (p0, pr0, m0) = Graph.pageRankConverged(edges, "s", "d",
-      iters = 4, driverCap = 0L)
-    assert(rows(p1) == rows(p0) && pr1 == pr0 && m1 == m0)
-    assert(rows(Graph.labelPropagation(edges, "s", "d", iters = 4)) ==
-      rows(Graph.labelPropagation(edges, "s", "d", iters = 4,
-        driverCap = 0L)))
-    val (l1, lr1) = Graph.labelPropagationConverged(edges, "s", "d",
-      iters = 6)
-    val (l0, lr0) = Graph.labelPropagationConverged(edges, "s", "d",
-      iters = 6, driverCap = 0L)
-    assert(rows(l1) == rows(l0) && lr1 == lr0)
-    assert(rows(Graph.kCore(edges, "s", "d", k = 3, iters = 5)) ==
-      rows(Graph.kCore(edges, "s", "d", k = 3, iters = 5,
-        driverCap = 0L)))
-    val (k1, kr1) = Graph.kCoreConverged(edges, "s", "d", k = 3,
-      iters = 20)
-    val (k0, kr0) = Graph.kCoreConverged(edges, "s", "d", k = 3,
-      iters = 20, driverCap = 0L)
-    assert(rows(k1) == rows(k0) && kr1 == kr0)
+    for ((dt, id) <- foldIdTypes) {
+      withClue(s"$dt ids: ") {
+        val edges = frame("s" -> dt, "d" -> dt)(
+          pairs.map { case (a, b) => Seq(id(a), id(b)) })
+        val seeds = frame("n" -> dt)(Seq(1L, 3L, 99L).map(n => Seq(id(n))))
+        val lseeds = frame("n" -> dt, "l" -> dt)(
+          Seq((1L, 7L), (3L, 2L), (99L, 5L)).map { case (n, l) =>
+            Seq(id(n), id(l)) })
+        assert(byValue(Graph.hits(edges, "s", "d", iters = 3)) ==
+          byValue(Graph.hits(edges, "s", "d", iters = 3, driverCap = 0L)))
+        assert(byValue(Graph.pageRankSeeded(edges, "s", "d", seeds, "n",
+            iters = 4)) ==
+          byValue(Graph.pageRankSeeded(edges, "s", "d", seeds, "n",
+            iters = 4, driverCap = 0L)))
+        assert(byValue(Graph.labelSpread(edges, "s", "d", lseeds, "n", "l",
+            iters = 4)) ==
+          byValue(Graph.labelSpread(edges, "s", "d", lseeds, "n", "l",
+            iters = 4, driverCap = 0L)))
+        val (d1, r1) = Graph.hopDistanceConverged(edges, "s", "d", seeds,
+          "n", maxHops = 6)
+        val (d0, r0) = Graph.hopDistanceConverged(edges, "s", "d", seeds,
+          "n", maxHops = 6, driverCap = 0L)
+        assert(byValue(d1) == byValue(d0))
+        assert(r1 == r0)
+        assert(byValue(Graph.pageRank(edges, "s", "d", iters = 3)) ==
+          byValue(Graph.pageRank(edges, "s", "d", iters = 3,
+            driverCap = 0L)))
+        // Weights come from the Long ids, whatever the id type.
+        val wedges = frame("s" -> dt, "d" -> dt, "w" -> LongType)(
+          pairs.map { case (a, b) => Seq(id(a), id(b), (a * 7 + b) % 5 + 1) })
+        assert(byValue(Graph.pageRankWeighted(wedges, "s", "d", "w",
+            iters = 3)) ==
+          byValue(Graph.pageRankWeighted(wedges, "s", "d", "w", iters = 3,
+            driverCap = 0L)))
+        val (p1, pr1, m1) = Graph.pageRankConverged(edges, "s", "d",
+          iters = 4)
+        val (p0, pr0, m0) = Graph.pageRankConverged(edges, "s", "d",
+          iters = 4, driverCap = 0L)
+        assert(byValue(p1) == byValue(p0) && pr1 == pr0 && m1 == m0)
+        assert(byValue(Graph.labelPropagation(edges, "s", "d", iters = 4)) ==
+          byValue(Graph.labelPropagation(edges, "s", "d", iters = 4,
+            driverCap = 0L)))
+        val (l1, lr1) = Graph.labelPropagationConverged(edges, "s", "d",
+          iters = 6)
+        val (l0, lr0) = Graph.labelPropagationConverged(edges, "s", "d",
+          iters = 6, driverCap = 0L)
+        assert(byValue(l1) == byValue(l0) && lr1 == lr0)
+        assert(byValue(Graph.kCore(edges, "s", "d", k = 3, iters = 5)) ==
+          byValue(Graph.kCore(edges, "s", "d", k = 3, iters = 5,
+            driverCap = 0L)))
+        val (k1, kr1) = Graph.kCoreConverged(edges, "s", "d", k = 3,
+          iters = 20)
+        val (k0, kr0) = Graph.kCoreConverged(edges, "s", "d", k = 3,
+          iters = 20, driverCap = 0L)
+        assert(byValue(k1) == byValue(k0) && kr1 == kr0)
+      }
+    }
+    // a→b, b→c, c→b, a→c over binary ids: a fold keyed by byte[]
+    // reference made every occurrence of an id a node of its own.
+    val bin = frame("s" -> BinaryType, "d" -> BinaryType)(
+      Seq("a" -> "b", "b" -> "c", "c" -> "b", "a" -> "c").map {
+        case (a, b) => Seq(a.getBytes("UTF-8"), b.getBytes("UTF-8")) })
+    val ranks = Graph.pageRank(bin, "s", "d", iters = 3).collect()
+      .map(r => new String(r.getAs[Array[Byte]](0), "UTF-8") -> r.getLong(1))
+      .toSeq.sorted
+    assert(ranks == Seq("a" -> 150000L, "b" -> 1425000L, "c" -> 1425000L))
   }
 
   test("adamicAdar: rare shared neighbors outweigh hubs, exact micro terms") {

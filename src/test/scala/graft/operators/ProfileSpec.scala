@@ -1290,6 +1290,23 @@ class ProfileSpec extends SparkSpec {
     assert(e.isNullAt(e.fieldIndex("or_micro")))
   }
 
+  test("hodgesLehmann: maxN past the two-arm pair cap fails before any job") {
+    import graft.functions.SeriesKernels.MaxArmN
+    assert(MaxArmN == 3162)
+    val df = Seq(("G", 10.0, true, 1L), ("G", 12.0, true, 2L),
+      ("G", 1.0, false, 3L)).toDF("g", "v", "a", "t")
+    val sc = spark.sparkContext
+    sc.setJobGroup("arm-maxN-bound", "maxN bound")
+    try {
+      intercept[IllegalArgumentException](Profile.hodgesLehmann(
+        df, "g", "v", "a", "t", maxN = MaxArmN + 1))
+    } finally sc.clearJobGroup()
+    assert(sc.statusTracker.getJobIdsForGroup("arm-maxN-bound").isEmpty)
+    assert(rows(Profile.hodgesLehmann(df, "g", "v", "a", "t",
+        maxN = MaxArmN)) ==
+      rows(Profile.hodgesLehmann(df, "g", "v", "a", "t")))
+  }
+
   test("hodgesLehmann: hand median shift, Cliff's delta, one-armed absent") {
     val df = Seq(
       // G: A=[10,12] vs B=[1,3] -> diffs 7,9,9,11 -> HL 9, delta 1.

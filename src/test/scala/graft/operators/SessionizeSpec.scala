@@ -282,13 +282,19 @@ class SessionizeSpec extends SparkSpec {
           chans(rng.nextInt(chans.size)))
       }
     }
-    val df = rows.toDF("k", "ts", "id", "t")
-    def run(cap: Long) = Sessionize.markovAttribution(df, "k", "ts",
-        "id", "t", conversionType = "buy", iters = 8, driverCap = cap)
-      .orderBy("channel").collect().toSeq
-    val driver = run(10000L)
-    val dist = run(0L)
-    assert(driver == dist)
-    assert(driver.nonEmpty)
+    // The journey key takes every fold id type (Double keys u0 and u1
+    // become 0.0 and −0.0, one journey to Spark). Channels reach the
+    // fold as the string states of the transition census.
+    import org.apache.spark.sql.types.{LongType, StringType, TimestampType}
+    for ((dt, id) <- foldIdTypes) {
+      val df = frame("k" -> dt, "ts" -> TimestampType, "id" -> LongType,
+          "t" -> StringType)(
+        rows.map { case (k, t, i, c) => Seq(id(k.drop(1).toLong), t, i, c) })
+      def run(cap: Long) = Sessionize.markovAttribution(df, "k", "ts",
+          "id", "t", conversionType = "buy", iters = 8, driverCap = cap)
+      val driver = byValue(run(10000L))
+      assert(driver == byValue(run(0L)), s"$dt keys")
+      assert(driver.nonEmpty)
+    }
   }
 }

@@ -723,6 +723,34 @@ class TimeSeriesSpec extends SparkSpec {
     assert(r.getAs[Long]("sen_micro") == 1000000L)
   }
 
+  test("theilSen/mannKendall: maxN past the pair cap fails before any job") {
+    import graft.functions.SeriesKernels.MaxSeriesN
+    assert(MaxSeriesN == 4472)
+    val ts = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
+    def at(s: Long) = new java.sql.Timestamp(ts.getTime + s * 1000)
+    val series = Seq(1.0, 3.0, 2.0, 5.0).zipWithIndex
+      .map { case (v, i) => ("T", at(i.toLong), i.toLong, v) }
+      .toDF("k", "ts", "id", "v")
+    val line = Seq(("R", 0.0, 1.0, 1L), ("R", 1.0, 3.0, 2L),
+      ("R", 2.0, 5.0, 3L)).toDF("g", "x", "y", "id")
+    val sc = spark.sparkContext
+    sc.setJobGroup("series-maxN-bound", "maxN bound")
+    try {
+      intercept[IllegalArgumentException](TimeSeries.mannKendall(
+        series, "k", "ts", "id", "v", maxN = MaxSeriesN + 1))
+      intercept[IllegalArgumentException](TimeSeries.theilSen(
+        line, "g", "x", "y", "id", maxN = MaxSeriesN + 1))
+    } finally sc.clearJobGroup()
+    assert(sc.statusTracker.getJobIdsForGroup("series-maxN-bound").isEmpty)
+    // The bound itself is accepted, and short series are unaffected.
+    assert(rows(TimeSeries.mannKendall(series, "k", "ts", "id", "v",
+        maxN = MaxSeriesN)) ==
+      rows(TimeSeries.mannKendall(series, "k", "ts", "id", "v")))
+    assert(rows(TimeSeries.theilSen(line, "g", "x", "y", "id",
+        maxN = MaxSeriesN)) ==
+      rows(TimeSeries.theilSen(line, "g", "x", "y", "id")))
+  }
+
   test("periodogram: pure cosine peaks at its own bin, replayed exactly") {
     val ts0 = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
     def at(s: Long) = new java.sql.Timestamp(ts0.getTime + s * 1000)

@@ -85,36 +85,6 @@ class SessionizerSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("transformWithState variant emits the same sessions as flatMapGroupsWithState") {
-    implicit val s = spark
-    import spark.implicits._
-    // transformWithState requires the RocksDB state store provider.
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val input = MemoryStream[StatusSample](spark)
-      val q = Sessionizer.sessionsTws(input.toDS()).writeStream
-        .format("memory").queryName("sessions_tws")
-        .outputMode("append").start()
-      try {
-        input.addData(
-          sample("d1", "2024-01-01 10:00:00", "cleaning", 98),
-          sample("d1", "2024-01-01 10:05:00", "charging", 88))
-        q.processAllAvailable()
-        val got = spark.table("sessions_tws")
-          .select("deviceName", "batteryStart", "batteryEnd").collect()
-        assert(got.length == 1)
-        assert(got.head.getInt(1) == 98 && got.head.getInt(2) == 88)
-      } finally q.stop()
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-  }
-
   test("streaming restart: checkpoint carries session state across query restarts") {
     implicit val s = spark
     import spark.implicits._
