@@ -1,19 +1,21 @@
 package graft.operators
 
-import graft.sources.Tables
+import graft.sources.ManifestTable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** T4 — the `--mode smart` incremental sync (pipeline.py:472-572) as
   * one idempotent batch job over the whole device fleet:
   *
-  *   summaries ⟕ state → counter filter (F4) → three keyed appends →
-  *   atomic state overwrite
+  *   summaries ⟕ state → counter filter (F4) → three appends + state
+  *   snapshot in ONE [[ManifestTable.commitMulti]] manifest
   *
-  * versus the reference's per-device network loop. The state advances
-  * only after the appends succeed, and appends themselves dedup on
-  * their natural keys — re-running a crashed sync is safe (the
-  * reference instead advances state "regardless of sheets success",
+  * versus the reference's per-device network loop. The data and the
+  * state land together or not at all: a crash at any point leaves the
+  * previous sync intact, and re-running the same `syncId` after a
+  * successful commit is a recorded no-op — exactly-once comes from the
+  * transaction id, not from re-reading written keys (the reference
+  * instead advances state "regardless of sheets success",
   * pipeline.py:562-568, and loses those rows forever).
   *
   * Scale: `summaries`/`status`/`consumables` are one-row-per-device
@@ -28,74 +30,17 @@ object SmartSync {
   case class Result(devicesWithNewWork: Long, statusRows: Long,
       summaryRows: Long, consumablesRows: Long)
 
-  /** One sync pass. Inputs are normalized snapshots (Ingest.normalize*).
-    * Sinks live under `baseDir` as parquet tables. */
+  /** One sync pass. Inputs are normalized snapshots
+    * (Ingest.normalize*); the tables live in the manifest log under
+    * `baseDir`. `syncId` identifies the sync attempt (e.g. the
+    * scheduler's run id); retries of a failed attempt MUST reuse it. */
   def run(
-      spark: SparkSession,
-      summaries: DataFrame,
-      status: DataFrame,
-      consumables: DataFrame,
-      baseDir: String): Result = {
-
-    val state =
-      if (Tables.exists(spark, baseDir, StateTable)) Tables.read(spark, baseDir, StateTable)
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("deviceName",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("lastCleanCount",
-            org.apache.spark.sql.types.LongType))))
-
-    // F4 — devices whose lifetime counter advanced since last sync.
-    val newWork = Pipeline.devicesWithNewWork(summaries, state).cache()
-    val devices = newWork.select(col("deviceName"))
-
-    def forNewDevices(df: DataFrame): DataFrame =
-      df.join(broadcast(devices), Seq("deviceName"), "left_semi")
-
-    // Appends keyed on (device, snapshot time) — idempotent re-runs.
-    val statusN = Tables.appendDedup(forNewDevices(status), baseDir,
-      "device_status", Seq("deviceName", "timestamp"))
-    val summaryN = Tables.appendDedup(
-      forNewDevices(summaries
-        .select(col("timestamp"), col("deviceName"), col("totalCleanTimeMin"),
-          col("totalCleanAreaM2"), col("totalCleanCount"))),
-      baseDir, "clean_summary", Seq("deviceName", "totalCleanCount"))
-    val consumablesN = Tables.appendDedup(forNewDevices(consumables), baseDir,
-      "consumables", Seq("deviceName", "timestamp"))
-
-    // State commits last — after all sinks succeeded. New state = the
-    // current counters, carrying forward devices absent from this
-    // snapshot (a device offline today must not lose its watermark).
-    val nNew = newWork.count()
-    if (nNew > 0) {
-      val cur = Pipeline.nextState(summaries)
-      val carried = state.join(cur, Seq("deviceName"), "left_anti")
-      Tables.overwriteState(cur.unionByName(carried), baseDir, StateTable)
-    }
-    newWork.unpersist()
-    Result(nNew, statusN, summaryN, consumablesN)
-  }
-
-  /** [[run]] with the versioned-manifest commit protocol: the three
-    * data appends AND the state snapshot land in ONE atomic manifest
-    * rename ([[graft.sources.ManifestTable.commitMulti]]). A crash at
-    * any point leaves the previous sync fully intact; re-running the
-    * same `syncId` after a successful commit is a recorded no-op. This
-    * closes T7 without re-reading written keys — exactly-once comes
-    * from the transaction id, not from dedup-on-append.
-    *
-    * `syncId` identifies the sync attempt (e.g. the scheduler's run
-    * id); retries of a failed attempt MUST reuse it. */
-  def runTransactional(
       spark: SparkSession,
       summaries: DataFrame,
       status: DataFrame,
       consumables: DataFrame,
       baseDir: String,
       syncId: String): Result = {
-    import graft.sources.ManifestTable
     if (ManifestTable.committedTxns(spark, baseDir).contains(syncId))
       return Result(0L, 0L, 0L, 0L)
 

@@ -6,15 +6,12 @@ import org.apache.spark.sql.types.StructType
 /** Versioned-manifest commits — the transactional close of the T7
   * exactly-once story (SURVEY §2.8).
   *
-  * [[Tables.appendDedup]] makes re-runs safe by re-reading the sink's
-  * keys; that works, but a crash between a data append and the state
-  * swap still double-applies on any sink that is NOT re-read before
-  * writing (the reference has the mirror-image bug: it advances state
-  * even when the write failed, pipeline.py:562-568, losing rows).
-  * This sink closes the window structurally, Delta-style but with no
-  * external dependency — and the log spans a whole BASE DIRECTORY, so
-  * one commit can atomically append to several tables AND replace a
-  * state snapshot:
+  * The reference advances its sync state even when the write failed
+  * (pipeline.py:562-568), losing rows. This sink makes data and state
+  * land together or not at all, Delta-style but with no external
+  * dependency — and the log spans a whole BASE DIRECTORY, so one
+  * commit can atomically append to several tables AND replace a state
+  * snapshot:
   *
   * Layout under `baseDir/`:
   *   - `<table>/data/<txn>-<uuid>/part-*.parquet` — data files,
@@ -33,27 +30,37 @@ import org.apache.spark.sql.types.StructType
   *     file left by a lost or speculative task attempt is never
   *     referenced.
   *
-  * The commit point is a single Hadoop `rename` of the manifest into
-  * `_log/` — atomic on HDFS and local FS. Crash before the rename ⇒
-  * orphan data files that no reader ever sees (reclaimed by
-  * [[vacuum]], which also drops unreferenced files inside referenced
-  * dirs); a write that FAILS deletes its call's txn dirs itself.
-  * Crash after the rename ⇒ the commit is complete, and re-running
-  * the same `txnId` is a recorded no-op. Because every table touched
-  * by a sync rides in the SAME manifest, "some sinks advanced but not
-  * the watermark" can no longer happen — the whole sync is one rename.
+  * Every write — [[commitMulti]], [[restore]] and the rewrite ops
+  * ([[deleteWhere]], [[optimize]], [[replaceWhere]], [[upsertKeyed]])
+  * — becomes visible through ONE private publish step: it writes the
+  * manifest to a tmp file, re-reads only the log versions newer than
+  * the one the write was planned against, runs the op's guard (the
+  * add-column gate, the restore schema guard, or the same-table
+  * conflict check), and claims the next version slot in one atomic
+  * step. Crash before the claim ⇒ orphan data files that no reader
+  * ever sees (reclaimed by [[vacuum]], which also drops unreferenced
+  * files inside referenced dirs). A write that FAILS or that the
+  * publish step ABORTS — guard, conflict, 100 lost slot races, its txn
+  * already sealed, or a malformed `graft.manifest.compactEvery` —
+  * deletes its call's txn dirs itself. Crash after the claim ⇒ the
+  * commit is complete, and re-running the same `txnId` is a recorded
+  * no-op. Because every table touched by a sync rides in the SAME
+  * manifest, "some sinks advanced but not the watermark" can no longer
+  * happen — the whole sync is one claim.
   *
   * Readers take the union of `add:` entries across contiguous
   * versions (resetting at `snap:` markers) — a 100 TB table is listed
   * via one small-file directory scan of `_log/`, never a recursive
   * data-directory listing.
   *
-  * Every [[compact]] interval (`graft.manifest.compactEvery`, default
-  * 64) a `ckpt_v…` summary is written so steady-state reads open one
-  * checkpoint plus a bounded tail — a fleet sealing no-op syncs every
-  * few minutes forever must not make year-two syncs read a year-one
-  * log. [[truncateLog]] (explicit, never automatic) then drops the
-  * covered manifests and with them pre-checkpoint time travel.
+  * Whenever any commit claims a version that is a multiple of
+  * `graft.manifest.compactEvery` (default 64), the publish step writes
+  * a `ckpt_v…` summary ([[compact]]) so steady-state reads open one
+  * checkpoint plus a bounded tail — a fleet sealing no-op syncs, or a
+  * table kept only by rewrites, must not make year-two reads open a
+  * year-one log. [[truncateLog]] (explicit, never automatic) then
+  * drops the covered manifests and with them pre-checkpoint time
+  * travel.
   *
   * Concurrency stance: single writer per base dir (the reference's
   * sync is a single loop; Spark jobs coordinate upstream). On HDFS the
@@ -163,6 +170,15 @@ object ManifestTable {
       log: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.Path] =
     if (!fs.exists(log)) Nil else fs.listStatus(log).toSeq.map(_.getPath)
 
+  /** The log's checkpoints with their versions, oldest first. */
+  private def checkpoints(fs: org.apache.hadoop.fs.FileSystem,
+      log: org.apache.hadoop.fs.Path): Seq[(org.apache.hadoop.fs.Path, Long)] =
+    listLog(fs, log).filter(_.getName.matches("ckpt_v\\d{20}"))
+      .map(p => p -> p.getName.drop(6).toLong).sortBy(_._2)
+
+  private def lastVersion(log: Seq[Manifest]): Long =
+    log.lastOption.map(_.version).getOrElse(0L)
+
   /** Committed manifests with version > `after`, oldest first — the
     * incremental read: commit retries re-open only NEW versions, not
     * the whole O(versions) history per attempt. Never consults
@@ -182,11 +198,9 @@ object ManifestTable {
     * no checkpoint exists yet. */
   private def readLog(spark: SparkSession, baseDir: String): Seq[Manifest] = {
     val (fs, log) = fsAndPath(spark, s"$baseDir/$LogDir")
-    val base = listLog(fs, log)
-      .filter(_.getName.matches("ckpt_v\\d{20}"))
-      .sortBy(_.getName).lastOption
-      .map(p => parseManifest(fs, p, p.getName.drop(6).toLong))
-    base.toSeq ++ readLogAfter(spark, baseDir, base.map(_.version).getOrElse(0L))
+    val base = checkpoints(fs, log).lastOption
+      .map { case (p, v) => parseManifest(fs, p, v) }
+    base.toSeq ++ readLogAfter(spark, baseDir, lastVersion(base.toSeq))
   }
 
   /** The COMPLETE raw history, checkpoints ignored — what [[vacuum]]
@@ -217,7 +231,7 @@ object ManifestTable {
     * the upper bound an incremental [[tableChanges]] consumer polls
     * up to. */
   def latestVersion(spark: SparkSession, baseDir: String): Long =
-    readLog(spark, baseDir).lastOption.map(_.version).getOrElse(0L)
+    lastVersion(readLog(spark, baseDir))
 
   /** The live file set per the log: appends accumulate; a `snap:`
     * marker resets its table to that manifest's adds. */
@@ -244,6 +258,50 @@ object ManifestTable {
     * schema-tracking commit). */
   def schemaOf(spark: SparkSession, baseDir: String, table: String)
       : Option[StructType] = latestSchema(readLog(spark, baseDir), table)
+
+  /** A parquet reader under the table's committed schema (files written
+    * before an add-column commit null-fill the new columns), or an
+    * inferring one on a pre-tracking table. */
+  private def committedReader(
+      spark: SparkSession, log: Seq[Manifest], table: String) =
+    latestSchema(log, table).map(spark.read.schema).getOrElse(spark.read)
+
+  /** The add-column-only evolution gate of every append-like write
+    * (appends, upsert deltas, replaceWhere data): each column the table
+    * already tracks must stay, same name and type, or old and new files
+    * stop being one coherent table. A snapshot replaces the contents
+    * outright and may reshape freely. */
+  private def requireAddColumnOnly(
+      log: Seq[Manifest], table: String, schema: StructType, verb: String): Unit =
+    latestSchema(log, table).foreach { prev =>
+      val now = schema.map(f => f.name -> f.dataType).toMap
+      prev.foreach { f =>
+        require(now.get(f.name).contains(f.dataType),
+          s"$verb $table must keep column '${f.name}: ${f.dataType.sql}' " +
+            "(schema evolution is add-column only; snapshot the table to " +
+            "reshape it)")
+      }
+    }
+
+  /** The `schema:` line an append-like write of `schema` stamps. A
+    * schema line activates explicit-schema reads, so it is stamped only
+    * where that cannot regress: the table already tracks its schema, or
+    * it has no live files yet (brand-new). A write to a LEGACY table
+    * (live pre-tracking files, unknown columns) keeps schema inference —
+    * stamping would hide legacy columns or break on a type mismatch. */
+  private def schemaStamp(
+      log: Seq[Manifest], table: String, schema: StructType): Option[String] =
+    if (latestSchema(log, table).isDefined || liveFiles(log, table).isEmpty)
+      Some(s"schema:$table\t${schema.json}")
+    else None
+
+  /** The log a write of `txnId` is planned against, or None when
+    * `txnId` is already sealed (the caller's recorded no-op). */
+  private def planLog(
+      spark: SparkSession, baseDir: String, txnId: String): Option[Seq[Manifest]] = {
+    require(txnId.nonEmpty && !txnId.contains("\n"), s"bad txnId: $txnId")
+    Some(readLog(spark, baseDir)).filterNot(_.exists(_.txns.contains(txnId)))
+  }
 
   /** Single-table append facade over [[commitMulti]]. */
   def commit(
@@ -343,7 +401,7 @@ object ManifestTable {
   }
 
   /** Atomically commit appends to several tables plus full-replace
-    * snapshots (state tables) in ONE manifest rename. Re-running a
+    * snapshots (state tables) in ONE manifest. Re-running a
     * `txnId` that already committed is a no-op returning an empty map
     * — crash-rerun cannot double-apply, and no subset of the tables
     * can ever be visible without the rest.
@@ -355,7 +413,7 @@ object ManifestTable {
     * `txnId` can simply be re-run.
     *
     * `beforeCommit` is a test seam: it runs after all data files are
-    * durable but before the manifest rename (the crash window the
+    * durable but before the publish step (the crash window the
     * protocol closes). Production callers leave the default. */
   def commitMulti(
       spark: SparkSession,
@@ -365,38 +423,16 @@ object ManifestTable {
       snapshots: Map[String, DataFrame] = Map.empty,
       state: Option[String] = None,
       beforeCommit: () => Unit = () => ()): Map[String, Long] = {
-    require(txnId.nonEmpty && !txnId.contains("\n"), s"bad txnId: $txnId")
     require(state.forall(!_.contains("\n")), "state payload must be one line")
     require((appends.keySet & snapshots.keySet).isEmpty,
       "a table cannot be both appended and snapshotted in one commit")
-    // Parse the compaction conf BEFORE anything is durable: a malformed
-    // value must fail the call cleanly here, not throw after the commit
-    // rename (where the caller's retry would no-op via the sealed-txn
-    // check and lose the written row-count map).
-    val ckptEvery = compactEvery(spark)
-    // One full log parse; the retry loop below only reads NEWER versions.
-    var log = readLog(spark, baseDir)
-    if (log.exists(_.txns.contains(txnId))) return Map.empty
-    // Schema evolution gate, BEFORE anything is durable: an APPEND may
-    // only add columns — every existing column must stay, same name and
-    // type, or old and new files stop being one coherent table. A
-    // SNAPSHOT replaces the table's contents outright, so it may
-    // reshape the schema freely. (Re-checked inside the commit retry
-    // loop: on HDFS a lost slot race means the log moved — a
-    // concurrent reshape must fail THIS commit, not land a stale
-    // schema line on top of it.)
+    val log = planLog(spark, baseDir, txnId).getOrElse(return Map.empty)
+    // The add-column gate runs BEFORE anything is durable, and again in
+    // every publish attempt: a concurrent reshape that lands first must
+    // fail THIS commit, not get a stale schema line stamped on top.
     def schemaGate(current: Seq[Manifest]): Unit =
       appends.foreach { case (t, df) =>
-        latestSchema(current, t).foreach { prev =>
-          val now = df.schema.map(f => f.name -> f.dataType).toMap
-          prev.foreach { f =>
-            require(now.get(f.name).contains(f.dataType),
-              s"append to $t must keep column '${f.name}: ${f.dataType.sql}' " +
-                s"(schema evolution is add-column only; snapshot the table " +
-                "to reshape it)")
-          }
-        }
-      }
+        requireAddColumnOnly(current, t, df.schema, "append to") }
     schemaGate(log)
 
     // 1. Data files first — invisible until a manifest references them.
@@ -433,61 +469,79 @@ object ManifestTable {
 
     beforeCommit()
 
-    // 2. Commit = one atomic claim of the next version slot. On HDFS
-    // that is a rename (rename onto an existing path fails). On local /
-    // POSIX filesystems rename OVERWRITES, so rename-as-OCC does not
-    // hold — there we claim via hard link, which is create-exclusive
-    // AND publishes the fully-written tmp content in one syscall.
-    // Retry versions forward: on a lost race, re-check only the new
-    // log entries (the winner may have been OUR txn from a previous
-    // attempt) and try the next slot.
-    val (fs, logPath) = fsAndPath(spark, s"$baseDir/$LogDir")
-    fs.mkdirs(logPath)
-    val body = (Seq(s"txn:$txnId") ++
-      snapshots.keys.toSeq.sorted.map(t => s"snap:$t") ++
+    // 2. Publish. Snapshots replace the contents, so they always stamp
+    // their schema; appends stamp per schemaStamp.
+    val body = snapshots.keys.toSeq.sorted.map(t => s"snap:$t") ++
       fileLines(written.toSeq.sortBy(_._1).flatMap(_._2)) ++
       bloomLines ++
-      // A schema line activates explicit-schema reads, so an APPEND may
-      // stamp one only where that cannot regress: the table already
-      // tracks its schema, or it has no live files yet (brand-new). An
-      // append to a LEGACY table (live pre-tracking files, unknown
-      // columns) must keep schema inference — stamping the append's own
-      // schema would hide legacy columns or break on type mismatch.
-      // Snapshots replace the contents, so they always stamp.
-      (appends.filter { case (t, _) =>
-          latestSchema(log, t).isDefined || liveFiles(log, t).isEmpty } ++
-        snapshots).toSeq.sortBy(_._1)
-        .map { case (t, df) => s"schema:$t\t${df.schema.json}" } ++
-      state.map(s => s"state:$s")).mkString("", "\n", "\n")
-    val tmp = writeTmp(fs, logPath, body)
+      entries.flatMap { case (t, df, _) =>
+        if (snapshots.contains(t)) Some(s"schema:$t\t${df.schema.json}")
+        else schemaStamp(log, t, df.schema) } ++
+      state.map(s => s"state:$s")
+    publish(spark, baseDir, txnId, log, body, entries.map(_._3), schemaGate)
+      .fold(Map.empty[String, Long])(_ =>
+        written.map { case (t, files) => t -> files.map(_.rows).sum })
+  }
+
+  /** The one commit point of every write: publish the manifest `body`
+    * (its `txn:` line is prepended here) as the next log version.
+    *
+    * Writes the manifest to a tmp file, then per attempt re-reads only
+    * the versions newer than the log seen so far (starting from
+    * `planned`, the log the write was planned against), stops if
+    * `txnId` is already sealed (a prior attempt of ours won), runs
+    * `guard` against the extended log, and claims the next slot with
+    * [[claimSlot]] — on a lost race it retries the next slot, up to 100
+    * times. Returns the claimed version, or None if the txn was already
+    * sealed.
+    *
+    * Whenever the step gives up by itself — a malformed
+    * `graft.manifest.compactEvery`, a throwing `guard`, 100 lost races,
+    * or the txn already sealed — it deletes the tmp manifest AND the
+    * call's txn `dirs` (relative to `baseDir`), so an aborted write
+    * leaves no orphaned data. After a claim of a version that is a
+    * multiple of `compactEvery`, it writes a checkpoint, whichever op
+    * claimed the version (best effort: the commit has already
+    * succeeded). */
+  private def publish(
+      spark: SparkSession,
+      baseDir: String,
+      txnId: String,
+      planned: Seq[Manifest],
+      body: Seq[String],
+      dirs: Seq[String],
+      guard: Seq[Manifest] => Unit): Option[Long] = {
+    val (fs, logPath) = fsAndPath(spark, s"$baseDir/$LogDir")
+    def dropDirs(): Unit =
+      dirs.foreach(d => fs.delete(new org.apache.hadoop.fs.Path(s"$baseDir/$d"), true))
+    val ckptEvery = try compactEvery(spark)
+      catch { case e: Throwable => dropDirs(); throw e }
+    fs.mkdirs(logPath)
+    val tmp = writeTmp(fs, logPath, (s"txn:$txnId" +: body).mkString("", "\n", "\n"))
+    def abandon(): Unit = { fs.delete(tmp, false); dropDirs() }
+    var log = planned
+    var committed = 0L
     var attempts = 0
-    var committed = -1L
-    while (committed < 0) {
+    while (committed == 0L) {
       attempts += 1
-      if (attempts > 100) {
-        fs.delete(tmp, false)
-        throw new java.io.IOException(
-          s"manifest commit for $txnId lost 100 races — aborting")
-      }
-      log = log ++ readLogAfter(spark, baseDir,
-        log.lastOption.map(_.version).getOrElse(0L))
-      if (log.exists(_.txns.contains(txnId))) { // a prior attempt of ours won
-        fs.delete(tmp, false)
-        return Map.empty
-      }
-      try schemaGate(log) catch { case e: Throwable =>
-        fs.delete(tmp, false); throw e }
-      val next = log.lastOption.map(_.version).getOrElse(0L) + 1
+      // 0 = our txn is already sealed; otherwise the slot to claim.
+      val next =
+        try {
+          if (attempts > 100) throw new java.io.IOException(
+            s"manifest commit for $txnId lost 100 races — aborting")
+          log = log ++ readLogAfter(spark, baseDir, lastVersion(log))
+          if (log.exists(_.txns.contains(txnId))) 0L
+          else { guard(log); lastVersion(log) + 1 }
+        } catch { case e: Throwable => abandon(); throw e }
+      if (next == 0L) { abandon(); return None }
       if (claimSlot(fs, tmp, new org.apache.hadoop.fs.Path(logPath,
           versionName(next)))) committed = next
     }
     if (fs.getScheme == "file") fs.delete(tmp, false)
-    // Opportunistic compaction keeps reads O(tail), never blocks the
-    // commit that just succeeded.
     if (committed % ckptEvery == 0)
       try compact(spark, baseDir)
       catch { case scala.util.control.NonFatal(_) => () }
-    written.map { case (t, files) => t -> files.map(_.rows).sum }
+    Some(committed)
   }
 
   /** The `add:`, `stats:` and `rows:` lines of a manifest for files as
@@ -684,17 +738,9 @@ object ManifestTable {
     // claimSlot finds ckpt_v<last> present and loses the claim.
     val tables = log.flatMap(m =>
       m.snaps ++ m.adds.map(_.takeWhile(_ != '/'))).distinct.sorted
-    val live = tables.flatMap(t => liveFiles(log, t))
-    val allStats = log.flatMap(_.stats).toMap // files write once; any wins
-    val allRows = log.flatMap(_.rows).toMap
-    val allBlooms = log.flatMap(_.blooms).toMap
     val body = (log.flatMap(_.txns).distinct.map(t => s"txn:$t") ++
       tables.map(t => s"snap:$t") ++
-      live.map(f => s"add:$f") ++
-      live.flatMap(f => allStats.get(f).map(j => s"stats:$f\t$j")) ++
-      live.flatMap(f => allRows.get(f).map(c => s"rows:$f\t$c")) ++
-      live.flatMap(f => allBlooms.collect {
-        case ((bf, c), hx) if bf == f => s"bloom:$f\t$c\t$hx" }.toSeq.sorted) ++
+      carriedLines(log, tables.flatMap(t => liveFiles(log, t))) ++
       tables.flatMap(t => log.reverse.flatMap(_.schemas.get(t)).headOption
         .map(j => s"schema:$t\t$j")) ++
       log.reverse.flatMap(_.state).headOption.map(s => s"state:$s"))
@@ -706,15 +752,28 @@ object ManifestTable {
     Some(last)
   }
 
+  /** The `add:` lines re-referencing already-written `files`, with the
+    * `stats:`, `rows:` and `bloom:` lines `log` recorded for them (files
+    * are written once, so any recording wins) — a checkpoint or restore
+    * carries file skipping and metadata counts forward. */
+  private def carriedLines(log: Seq[Manifest], files: Seq[String]): Seq[String] = {
+    val allStats = log.flatMap(_.stats).toMap
+    val allRows = log.flatMap(_.rows).toMap
+    val bloomsOf = log.flatMap(_.blooms).groupBy(_._1._1)
+    files.map(f => s"add:$f") ++
+      files.flatMap(f => allStats.get(f).map(j => s"stats:$f\t$j")) ++
+      files.flatMap(f => allRows.get(f).map(c => s"rows:$f\t$c")) ++
+      files.flatMap(f => bloomsOf.getOrElse(f, Nil).toMap.toSeq.map {
+        case ((_, c), hx) => s"bloom:$f\t$c\t$hx" }.sorted)
+  }
+
   /** Delete raw manifests covered by the latest checkpoint. This
     * DROPS time travel before the checkpoint: a following [[vacuum]]
     * reclaims data files only pre-checkpoint history referenced.
     * Returns the number of manifest files removed. */
   def truncateLog(spark: SparkSession, baseDir: String): Int = {
     val (fs, log) = fsAndPath(spark, s"$baseDir/$LogDir")
-    val ckpt = listLog(fs, log).filter(_.getName.matches("ckpt_v\\d{20}"))
-      .sortBy(_.getName).lastOption.map(_.getName.drop(6).toLong)
-      .getOrElse(return 0)
+    val ckpt = checkpoints(fs, log).lastOption.map(_._2).getOrElse(return 0)
     val old = listLog(fs, log).filter(p =>
       p.getName.matches("v\\d{20}") && p.getName.drop(1).toLong <= ckpt)
     old.foreach(p => fs.delete(p, false))
@@ -737,7 +796,7 @@ object ManifestTable {
     * would: the requested state predates the oldest reconstructible
     * version, or the table did not exist at `asOfVersion`.
     * `beforeCommit` is the same test seam as [[commitMulti]]'s: runs
-    * after the restore manifest is durable, before slot claiming. */
+    * just before the publish step. */
   def restore(
       spark: SparkSession,
       baseDir: String,
@@ -745,9 +804,7 @@ object ManifestTable {
       asOfVersion: Long,
       txnId: String,
       beforeCommit: () => Unit = () => ()): Long = {
-    require(txnId.nonEmpty && !txnId.contains("\n"), s"bad txnId: $txnId")
-    var log = readLog(spark, baseDir)
-    if (log.exists(_.txns.contains(txnId))) return -1L
+    val log = planLog(spark, baseDir, txnId).getOrElse(return -1L)
     val oldLog = logAsOf(spark, baseDir, asOfVersion)
     val files = liveFiles(oldLog, table)
     val schemaJson = oldLog.reverse.flatMap(_.schemas.get(table)).headOption
@@ -757,7 +814,9 @@ object ManifestTable {
     // commit has stamped a schema: the restore manifest would carry no
     // schema line, so post-restore reads would resolve the newer
     // schema and apply it to the legacy files — where a time-travel
-    // read of the same state correctly falls back to inference.
+    // read of the same state correctly falls back to inference. The
+    // publish step re-runs the guard per attempt: a concurrent commit
+    // may stamp the table's first schema before the claim.
     def schemaGuard(cur: Seq[Manifest]): Unit =
       require(schemaJson.isDefined ||
           cur.forall(_.schemas.get(table).isEmpty),
@@ -766,50 +825,11 @@ object ManifestTable {
           "files under the newer schema; snapshot the time-travel read " +
           "instead")
     schemaGuard(log)
-    val allStats = oldLog.flatMap(_.stats).toMap
-    val allRows = oldLog.flatMap(_.rows).toMap
-    val allBlooms = oldLog.flatMap(_.blooms).toMap
-    val body = (Seq(s"txn:$txnId", s"snap:$table") ++
-      files.map(f => s"add:$f") ++
-      files.flatMap(f => allStats.get(f).map(j => s"stats:$f\t$j")) ++
-      files.flatMap(f => allRows.get(f).map(c => s"rows:$f\t$c")) ++
-      files.flatMap(f => allBlooms.collect {
-        case ((bf, c), hx) if bf == f => s"bloom:$f\t$c\t$hx" }.toSeq.sorted) ++
-      schemaJson.map(j => s"schema:$table\t$j")).mkString("", "\n", "\n")
-    val (fs, logPath) = fsAndPath(spark, s"$baseDir/$LogDir")
-    fs.mkdirs(logPath)
-    val tmp = writeTmp(fs, logPath, body)
     beforeCommit()
-    var attempts = 0
-    var committed = -1L
-    while (committed < 0) {
-      attempts += 1
-      if (attempts > 100) {
-        fs.delete(tmp, false)
-        throw new java.io.IOException(
-          s"restore commit for $txnId lost 100 races — aborting")
-      }
-      log = log ++ readLogAfter(spark, baseDir,
-        log.lastOption.map(_.version).getOrElse(0L))
-      if (log.exists(_.txns.contains(txnId))) { // a prior attempt won
-        fs.delete(tmp, false)
-        return -1L
-      }
-      // Re-run the no-tracked-schema guard against the EXTENDED log:
-      // a concurrent commit can stamp the table's first schema between
-      // the entry check and claimSlot, and letting the schema-less
-      // restore manifest land then would produce exactly the
-      // legacy-files-under-newer-schema state the guard prevents
-      // (commitMulti re-runs its schemaGate per attempt for the same
-      // reason).
-      try schemaGuard(log)
-      catch { case e: Throwable => fs.delete(tmp, false); throw e }
-      val next = log.lastOption.map(_.version).getOrElse(0L) + 1
-      if (claimSlot(fs, tmp, new org.apache.hadoop.fs.Path(logPath,
-          versionName(next)))) committed = next
-    }
-    if (fs.getScheme == "file") fs.delete(tmp, false)
-    committed
+    publish(spark, baseDir, txnId, log,
+      s"snap:$table" +: (carriedLines(oldLog, files) ++
+        schemaJson.map(j => s"schema:$table\t$j")),
+      dirs = Nil, schemaGuard).getOrElse(-1L)
   }
 
   /** Read the committed snapshot of one table. `schema` serves the
@@ -856,9 +876,7 @@ object ManifestTable {
   private def logAsOf(spark: SparkSession, baseDir: String, v: Long)
       : Seq[Manifest] = {
     val (fs, logPath) = fsAndPath(spark, s"$baseDir/$LogDir")
-    logAsOfFrom(fs, readFullLog(spark, baseDir),
-      listLog(fs, logPath).filter(_.getName.matches("ckpt_v\\d{20}"))
-        .map(p => p -> p.getName.drop(6).toLong).sortBy(_._2), v)
+    logAsOfFrom(fs, readFullLog(spark, baseDir), checkpoints(fs, logPath), v)
   }
 
   /** [[logAsOf]] against an already-read raw history and checkpoint
@@ -870,7 +888,7 @@ object ManifestTable {
       ckpts: Seq[(org.apache.hadoop.fs.Path, Long)],
       v: Long): Seq[Manifest] = {
     require(v > 0, s"asOfVersion must be positive, got $v")
-    val latestRaw = full.lastOption.map(_.version).getOrElse(0L)
+    val latestRaw = lastVersion(full)
     val ckpt = ckpts.filter(_._2 <= v).lastOption
     // Distinguish "not written yet" from "written then truncated": the
     // NEWEST checkpoint (even one above v) counts toward what exists,
@@ -945,7 +963,7 @@ object ManifestTable {
       case None => files
       case Some(pred) => prunedPartition(log, files, pred)._1
     }
-    val reader = logSchema.map(spark.read.schema).getOrElse(spark.read)
+    val reader = committedReader(spark, log, table)
     // Every live file pruned: the stats PROVED the predicate selects
     // zero rows, but the empty frame still needs the table's schema —
     // open one file's footer (metadata-only) and emit no rows.
@@ -1025,9 +1043,7 @@ object ManifestTable {
     // the whole table as inserts.
     val (fsL, logPath) = fsAndPath(spark, s"$baseDir/$LogDir")
     val full = readFullLog(spark, baseDir)
-    val ckpts = listLog(fsL, logPath)
-      .filter(_.getName.matches("ckpt_v\\d{20}"))
-      .map(p => p -> p.getName.drop(6).toLong).sortBy(_._2)
+    val ckpts = checkpoints(fsL, logPath)
     val logB = logAsOfFrom(fsL, full, ckpts, toVersion)
     val liveA =
       if (fromVersion == 0L) Set.empty[String]
@@ -1094,6 +1110,19 @@ object ManifestTable {
     case other => Seq(other)
   }
 
+  /** The column a pruning conjunct operand names, if it is a bare
+    * column. Single-part names only: a struct path like `x.ts` must
+    * never prune against the TOP-LEVEL `ts` stats or bloom. */
+  private def colName(
+      x: org.apache.spark.sql.catalyst.expressions.Expression): Option[String] =
+    x match {
+      case u: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+          if u.nameParts.length == 1 => Some(u.nameParts.head)
+      case a: org.apache.spark.sql.catalyst.expressions.AttributeReference =>
+        Some(a.name)
+      case _ => None
+    }
+
   /** Could any row of a file with column `ranges` satisfy this conjunct?
     * Only `column <op> literal` shapes (either operand order, numeric
     * or string literal against the matching range kind) can answer
@@ -1105,15 +1134,6 @@ object ManifestTable {
       e: org.apache.spark.sql.catalyst.expressions.Expression,
       ranges: Map[String, ColRange]): Boolean = {
     import org.apache.spark.sql.catalyst.expressions._
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-    def name(x: Expression): Option[String] = x match {
-      // Single-part names only: a struct path like `x.ts` must never
-      // prune against the TOP-LEVEL `ts` stats.
-      case u: UnresolvedAttribute if u.nameParts.length == 1 =>
-        Some(u.nameParts.head)
-      case a: AttributeReference => Some(a.name)
-      case _ => None
-    }
     def num(x: Expression): Option[BigDecimal] = x match {
       case Literal(v: Byte, _) => Some(BigDecimal(v.toInt))
       case Literal(v: Short, _) => Some(BigDecimal(v.toInt))
@@ -1162,8 +1182,8 @@ object ManifestTable {
     // Normalize to (range of column, op, literal) with the column on
     // the left, flipping the operator when the literal leads.
     def check(lhs: Expression, op: String, rhs: Expression): Option[Boolean] =
-      name(lhs).flatMap(n => rangeCheck(n, op, num(rhs), str(rhs)))
-        .orElse(name(rhs).flatMap(n =>
+      colName(lhs).flatMap(n => rangeCheck(n, op, num(rhs), str(rhs)))
+        .orElse(colName(rhs).flatMap(n =>
           rangeCheck(n, flip(op), num(lhs), str(lhs))))
     val ops = Set(">", ">=", "<", "<=", "=", "==")
     val verdict = e match {
@@ -1218,9 +1238,7 @@ object ManifestTable {
       txnId: String,
       beforeCommit: () => Unit = () => ()): Option[DeleteResult] = {
     import org.apache.spark.sql.functions.{coalesce, lit, not}
-    require(txnId.nonEmpty && !txnId.contains("\n"), s"bad txnId: $txnId")
-    val log = readLog(spark, baseDir)
-    if (log.exists(_.txns.contains(txnId))) return None
+    val log = planLog(spark, baseDir, txnId).getOrElse(return None)
     val files = liveFiles(log, table)
     val (candidates, kept) = prunedPartition(log, files, predicate)
     if (candidates.isEmpty) {
@@ -1232,9 +1250,8 @@ object ManifestTable {
       new org.apache.hadoop.fs.Path(s"$baseDir/$f")))
     // Rewrite the candidates minus the matching rows. The committed
     // schema is the read schema (old files null-fill evolved columns).
-    val reader = latestSchema(log, table).map(spark.read.schema)
-      .getOrElse(spark.read)
-    val survivors = reader.parquet(candidates.map(f => s"$baseDir/$f"): _*)
+    val survivors = committedReader(spark, log, table)
+      .parquet(candidates.map(f => s"$baseDir/$f"): _*)
       .filter(coalesce(not(predicate), lit(true)))
     val adds = writeRewrite(spark, baseDir, table, txnId, survivors)
     beforeCommit()
@@ -1447,13 +1464,6 @@ object ManifestTable {
       e: org.apache.spark.sql.catalyst.expressions.Expression,
       bloomOf: String => Option[String]): Boolean = {
     import org.apache.spark.sql.catalyst.expressions._
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-    def name(x: Expression): Option[String] = x match {
-      case u: UnresolvedAttribute if u.nameParts.length == 1 =>
-        Some(u.nameParts.head)
-      case a: AttributeReference => Some(a.name)
-      case _ => None
-    }
     def render(x: Expression): Option[String] = x match {
       case Literal(v: Byte, _) => Some(v.toString)
       case Literal(v: Short, _) => Some(v.toString)
@@ -1464,7 +1474,7 @@ object ManifestTable {
       case _ => None
     }
     def check(lhs: Expression, rhs: Expression): Option[Boolean] =
-      (name(lhs), render(rhs)) match {
+      (colName(lhs), render(rhs)) match {
         case (Some(n), Some(v)) =>
           bloomOf(n).map(bits => bloomMight(bits, v))
         case _ => None
@@ -1497,23 +1507,6 @@ object ManifestTable {
         bloomConjunctMayMatch(c, n => allBlooms.get((f, n))))
     }
   }
-
-  /** The add-column-only evolution gate shared by [[upsertKeyed]] and
-    * [[replaceWhere]] (commitMulti keeps its own copy inside the retry
-    * loop, where it re-checks a MOVED log). */
-  private def requireAddColumnOnly(
-      log: Seq[Manifest],
-      table: String,
-      schema: StructType,
-      verb: String): Unit =
-    latestSchema(log, table).foreach { prev =>
-      val now = schema.map(f => f.name -> f.dataType).toMap
-      prev.foreach { f =>
-        require(now.get(f.name).contains(f.dataType),
-          s"$verb into $table must keep column '${f.name}: " +
-            s"${f.dataType.sql}' (schema evolution is add-column only)")
-      }
-    }
 
   /** Parquet row count across `paths` — driver-side footer reads, no
     * Spark scan job. */
@@ -1553,80 +1546,48 @@ object ManifestTable {
       m.adds.exists(_.startsWith(p)) || m.removes.exists(_.startsWith(p))
   }
 
-  /** Claim a version slot for a rewrite manifest (`remove:` + `add:` +
-    * `stats:` under one txn, plus an optional `schema:` stamp for an
-    * evolving upsert) with the same retry discipline as
-    * [[commitMulti]]. Returns false if the txn turned out to be
-    * already sealed (a prior attempt of ours won).
+  /** Publish a rewrite manifest (`remove:` + `add:` + `stats:` under
+    * one txn, plus an optional `schema:` stamp for an evolving upsert).
+    * Returns false if the txn turned out to be already sealed (a prior
+    * attempt of ours won).
     *
     * Optimistic concurrency (the Delta conflict matrix, per table):
-    * `log0`'s tail is the version this rewrite was PLANNED against;
-    * before claiming a slot the loop re-reads the log and aborts
-    * (ConcurrentModificationException) iff an intervening commit
-    * TOUCHED `table` — its removes/adds were computed from a live-file
-    * set that no longer exists, and landing them would resurrect
-    * deleted rows or duplicate rewritten ones. Commits to OTHER
-    * tables are not conflicts: the loop simply claims the next slot
-    * after them. So: append ∥ append lands both; rewrite ∥ write to a
-    * different table lands both; deleteWhere/upsert/replaceWhere/
-    * optimize ∥ any same-table write aborts the rewrite, and the
-    * caller re-runs against the new log (the aborted txn is NOT
-    * sealed — the re-run is a fresh attempt, while a crash-replay of
-    * an already-LANDED txn still returns the recorded no-op). */
+    * `planned`'s tail is the version this rewrite was PLANNED against;
+    * the publish guard aborts (ConcurrentModificationException) iff a
+    * later commit TOUCHED `table` — its removes/adds were computed from
+    * a live-file set that no longer exists, and landing them would
+    * resurrect deleted rows or duplicate rewritten ones. Commits to
+    * OTHER tables are not conflicts: the claim simply moves to the next
+    * slot after them. So: append ∥ append lands both; rewrite ∥ write
+    * to a different table lands both; deleteWhere/upsert/replaceWhere/
+    * optimize ∥ any same-table write aborts the rewrite, deleting its
+    * written files, and the caller re-runs against the new log (the
+    * aborted txn is NOT sealed — the re-run is a fresh attempt, while a
+    * crash-replay of an already-LANDED txn still returns the recorded
+    * no-op). */
   private def commitRewrite(
       spark: SparkSession,
       baseDir: String,
       txnId: String,
-      log0: Seq[Manifest],
+      planned: Seq[Manifest],
       removes: Seq[String],
       adds: Seq[WrittenFile],
       kind: String,
       table: String,
-      schemaLine: Option[(String, String)] = None): Boolean = {
-    var log = log0
-    val body = (Seq(s"txn:$txnId") ++
-      removes.map(f => s"remove:$f") ++
-      fileLines(adds) ++
-      schemaLine.map { case (t, j) => s"schema:$t\t$j" })
-      .mkString("", "\n", "\n")
-    val (lfs, logPath) = fsAndPath(spark, s"$baseDir/$LogDir")
-    lfs.mkdirs(logPath)
-    val tmp = writeTmp(lfs, logPath, body)
-    var attempts = 0
-    var committed = -1L
-    while (committed < 0) {
-      attempts += 1
-      if (attempts > 100) {
-        lfs.delete(tmp, false)
-        throw new java.io.IOException(
-          s"$kind commit for $txnId lost 100 races — aborting")
-      }
-      log = log ++ readLogAfter(spark, baseDir,
-        log.lastOption.map(_.version).getOrElse(0L))
-      if (log.exists(_.txns.contains(txnId))) {
-        lfs.delete(tmp, false)
-        return false
-      }
-      // Conflict abort: someone else committed a write to THIS table
-      // after the rewrite was planned — removing/adding against the
-      // stale live set could resurrect their deleted rows or
-      // duplicate rewritten ones. Unrelated tables advancing the log
-      // are fine; the claim below just moves to the next free slot.
-      val planned = log0.lastOption.map(_.version).getOrElse(0L)
-      log.filter(_.version > planned).find(touchesTable(_, table))
+      schemaLine: Option[String] = None): Boolean = {
+    val plannedAt = lastVersion(planned)
+    def noConflict(log: Seq[Manifest]): Unit =
+      log.filter(_.version > plannedAt).find(touchesTable(_, table))
         .foreach { m =>
-          lfs.delete(tmp, false)
           throw new java.util.ConcurrentModificationException(
             s"$kind for $txnId: version ${m.version} wrote $table after " +
-              s"this rewrite was planned against version $planned — " +
+              s"this rewrite was planned against version $plannedAt — " +
               "re-run the operation against the current log")
         }
-      val next = log.lastOption.map(_.version).getOrElse(0L) + 1
-      if (claimSlot(lfs, tmp, new org.apache.hadoop.fs.Path(logPath,
-          versionName(next)))) committed = next
-    }
-    if (lfs.getScheme == "file") lfs.delete(tmp, false)
-    true
+    publish(spark, baseDir, txnId, planned,
+      removes.map(f => s"remove:$f") ++ fileLines(adds) ++ schemaLine,
+      adds.map(f => f.path.take(f.path.lastIndexOf('/'))).distinct,
+      noConflict).isDefined
   }
 
   /** Outcome of an [[optimize]]: small files folded into bigger ones. */
@@ -1656,10 +1617,8 @@ object ManifestTable {
       txnId: String,
       targetBytes: Long = 128L << 20,
       clusterCol: Option[String] = None): Option[OptimizeResult] = {
-    require(txnId.nonEmpty && !txnId.contains("\n"), s"bad txnId: $txnId")
     require(targetBytes > 0, "targetBytes must be positive")
-    val log = readLog(spark, baseDir)
-    if (log.exists(_.txns.contains(txnId))) return None
+    val log = planLog(spark, baseDir, txnId).getOrElse(return None)
     val (fs, _) = fsAndPath(spark, baseDir)
     val live = liveFiles(log, table)
     // One listStatus per data DIRECTORY, not one getFileStatus per
@@ -1682,9 +1641,8 @@ object ManifestTable {
     }
     val bytesIn = small.map(_._2).sum
     val nOut = math.max(1L, (bytesIn + targetBytes - 1) / targetBytes).toInt
-    val reader = latestSchema(log, table).map(spark.read.schema)
-      .getOrElse(spark.read)
-    val rows = reader.parquet(small.map(f => s"$baseDir/${f._1}"): _*)
+    val rows = committedReader(spark, log, table)
+      .parquet(small.map(f => s"$baseDir/${f._1}"): _*)
     val shaped = clusterCol match {
       case Some(c) =>
         val key = org.apache.spark.sql.functions.col(c)
@@ -1720,10 +1678,8 @@ object ManifestTable {
       data: DataFrame,
       txnId: String): Option[ReplaceResult] = {
     import org.apache.spark.sql.functions.{coalesce, lit, not}
-    require(txnId.nonEmpty && !txnId.contains("\n"), s"bad txnId: $txnId")
-    val log = readLog(spark, baseDir)
-    if (log.exists(_.txns.contains(txnId))) return None
-    requireAddColumnOnly(log, table, data.schema, "replaceWhere")
+    val log = planLog(spark, baseDir, txnId).getOrElse(return None)
+    requireAddColumnOnly(log, table, data.schema, "replaceWhere into")
     val files = liveFiles(log, table)
     val candidates = prunedPartition(log, files, predicate)._1
     val (survivorAdds, survivorRows, before) =
@@ -1731,9 +1687,7 @@ object ManifestTable {
       else {
         val before = parquetRowCount(spark, candidates.map(f =>
           new org.apache.hadoop.fs.Path(s"$baseDir/$f")))
-        val reader = latestSchema(log, table).map(spark.read.schema)
-          .getOrElse(spark.read)
-        val survivors = reader
+        val survivors = committedReader(spark, log, table)
           .parquet(candidates.map(f => s"$baseDir/$f"): _*)
           .filter(coalesce(not(predicate), lit(true)))
         val adds = writeRewrite(spark, baseDir, table, txnId, survivors)
@@ -1741,13 +1695,9 @@ object ManifestTable {
       }
     val dataAdds = writeRewrite(spark, baseDir, table, txnId + ".data", data)
     val inserted = dataAdds.map(_.rows).sum
-    val schemaLine =
-      if (latestSchema(log, table).isDefined || liveFiles(log, table).isEmpty)
-        Some(table -> data.schema.json)
-      else None
     if (!commitRewrite(spark, baseDir, txnId, log, candidates,
         survivorAdds ++ dataAdds, kind = "replaceWhere", table = table,
-        schemaLine = schemaLine)) return None
+        schemaLine = schemaStamp(log, table, data.schema))) return None
     Some(ReplaceResult(before - survivorRows, inserted, candidates.length))
   }
 
@@ -1775,12 +1725,8 @@ object ManifestTable {
       txnId: String,
       beforeCommit: () => Unit = () => ()): Option[UpsertResult] = {
     import org.apache.spark.sql.functions.{col, lit, max => smax, min => smin}
-    require(txnId.nonEmpty && !txnId.contains("\n"), s"bad txnId: $txnId")
-    val log = readLog(spark, baseDir)
-    if (log.exists(_.txns.contains(txnId))) return None
-    // Same add-column-only gate as commitMulti appends: the delta's
-    // files must stay one coherent table with the existing ones.
-    requireAddColumnOnly(log, table, delta.schema, "upsert")
+    val log = planLog(spark, baseDir, txnId).getOrElse(return None)
+    requireAddColumnOnly(log, table, delta.schema, "upsert into")
     // Pin the delta ONCE: its plan is otherwise re-evaluated for the
     // key bounds, the anti-join key set, and the landed files — and a
     // non-deterministic delta (sample, un-ordered limit) evaluated
@@ -1801,9 +1747,7 @@ object ManifestTable {
       else {
         val before = parquetRowCount(spark, candidates.map(f =>
           new org.apache.hadoop.fs.Path(s"$baseDir/$f")))
-        val reader = latestSchema(log, table).map(spark.read.schema)
-          .getOrElse(spark.read)
-        val survivors = reader
+        val survivors = committedReader(spark, log, table)
           .parquet(candidates.map(f => s"$baseDir/$f"): _*)
           .join(keys.distinct(), Seq(keyCol), "left_anti")
         val adds = writeRewrite(spark, baseDir, table, txnId, survivors)
@@ -1815,18 +1759,12 @@ object ManifestTable {
     // writeRewrite drops zero-row output and that is correct.
     val deltaAdds = writeRewrite(spark, baseDir, table, txnId + ".delta", pinned)
     val inserted = deltaAdds.map(_.rows).sum
-    // Stamp the delta's (possibly add-column-evolved) schema under the
-    // same conditions commitMulti appends do — a schema-tracking table
-    // must surface the new columns, and a brand-new table starts
-    // tracking; a legacy table keeps inference.
-    val schemaLine =
-      if (latestSchema(log, table).isDefined || liveFiles(log, table).isEmpty)
-        Some(table -> delta.schema.json)
-      else None
     beforeCommit()
+    // The delta's (possibly add-column-evolved) schema stamps under the
+    // same rule as commitMulti appends.
     if (!commitRewrite(spark, baseDir, txnId, log, candidates,
         survivorAdds ++ deltaAdds, kind = "upsert", table = table,
-        schemaLine = schemaLine)) return None
+        schemaLine = schemaStamp(log, table, delta.schema))) return None
     Some(UpsertResult(before - survivorRows, inserted, candidates.length))
   }
 
@@ -1844,9 +1782,8 @@ object ManifestTable {
     // truncateLog the checkpoint is the only reference to the live
     // files — neither view alone is safe.
     val (lfs, logPath) = fsAndPath(spark, s"$baseDir/$LogDir")
-    val ckptAdds = listLog(lfs, logPath)
-      .filter(_.getName.matches("ckpt_v\\d{20}"))
-      .flatMap(p => parseManifest(lfs, p, p.getName.drop(6).toLong).adds)
+    val ckptAdds = checkpoints(lfs, logPath)
+      .flatMap { case (p, v) => parseManifest(lfs, p, v).adds }
     val referenced =
       (readFullLog(spark, baseDir).flatMap(_.adds) ++ ckptAdds).toSet
     val (fs, dataRoot) = fsAndPath(spark, s"$baseDir/$table/$DataDir")

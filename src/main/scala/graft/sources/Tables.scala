@@ -1,108 +1,11 @@
 package graft.sources
 
-import graft.operators.Incremental
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.{DataFrame, SaveMode}
 
-/** K1–K3 — parquet table sinks replacing the reference's Google-Sheets
-  * tabs (sheets_client.py:54-169): idempotent creation, idempotent
-  * keyed append, partitioned layout.
-  *
-  * Scale: tables partition by ingest date (and optionally device), so
-  * time-bounded reads prune partitions; the idempotent append
-  * anti-joins only on the key columns of the EXISTING sink projection
-  * (column-pruned scan), not full rows.
-  */
+/** Catalog-table helpers. The K1–K3/K5 sinks that replace the
+  * reference's Google-Sheets tabs (sheets_client.py:54-169) live in
+  * [[ManifestTable]]. */
 object Tables {
-
-  def path(baseDir: String, table: String): String = s"$baseDir/$table"
-
-  private def hadoopPath(spark: SparkSession, p: String) = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    (hp.getFileSystem(spark.sessionState.newHadoopConf()), hp)
-  }
-
-  /** If a previous overwriteState crashed between parking the old
-    * state and promoting the new one, the parked `_old_` copy is the
-    * only valid state. EVERY access path (exists/read/overwrite) runs
-    * this first — recovery only at write time would let a reader
-    * cold-start on the missing target and then clobber the parked
-    * copy. */
-  private def recoverParkedState(spark: SparkSession, baseDir: String, table: String): Unit = {
-    val (fs, target) = hadoopPath(spark, path(baseDir, table))
-    val (_, old) = hadoopPath(spark, path(baseDir, s"_old_$table"))
-    if (!fs.exists(target) && fs.exists(old) && !fs.rename(old, target)) {
-      throw new java.io.IOException(
-        s"recovering parked state for $table failed")
-    }
-  }
-
-  /** Resolved through Hadoop's FileSystem so sinks work on any
-    * supported scheme (hdfs://, s3a://, file:) — java.io.File would
-    * silently report "missing" for every non-local URI, disabling
-    * dedup-on-append. */
-  def exists(spark: SparkSession, baseDir: String, table: String): Boolean = {
-    recoverParkedState(spark, baseDir, table)
-    val (fs, p) = hadoopPath(spark, path(baseDir, table))
-    fs.exists(p)
-  }
-
-  /** K3 — idempotent table creation with an explicit schema (the
-    * reference swallows "already exists", sheets_client.py:103-107). */
-  def create(
-      spark: SparkSession,
-      baseDir: String,
-      table: String,
-      schema: StructType,
-      partitionCols: Seq[String] = Nil): Unit = {
-    if (!exists(spark, baseDir, table)) {
-      val empty = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      val w = empty.write.mode(SaveMode.Overwrite)
-      (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-        .parquet(path(baseDir, table))
-    }
-  }
-
-  def read(spark: SparkSession, baseDir: String, table: String): DataFrame = {
-    recoverParkedState(spark, baseDir, table)
-    spark.read.parquet(path(baseDir, table))
-  }
-
-  /** K1/K2 — idempotent append: drop batch rows whose key already
-    * exists in the sink, then append. Makes every sync re-runnable —
-    * the set-oriented fix for the reference's advance-state-even-on-
-    * failure data loss (pipeline.py:562-568). */
-  def appendDedup(
-      batch: DataFrame,
-      baseDir: String,
-      table: String,
-      keys: Seq[String],
-      partitionCols: Seq[String] = Nil): Long = {
-    val spark = batch.sparkSession
-    val fresh =
-      if (exists(spark, baseDir, table)) {
-        val existing = read(spark, baseDir, table)
-        if (existing.isEmpty) batch
-        else Incremental.dedupAppend(batch, existing, keys)
-      } else batch
-    // persist ⇒ the anti-join runs once, shared by the count and the
-    // write (otherwise the sink is scanned and joined twice per sync).
-    // Only when WE built the plan — unpersisting a `fresh` that aliases
-    // the caller's `batch` would silently evict their cache.
-    val ownPlan = fresh ne batch
-    if (ownPlan) fresh.persist()
-    try {
-      val n = fresh.count()
-      if (n > 0) {
-        val w = fresh.write.mode(SaveMode.Append)
-        (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-          .parquet(path(baseDir, table))
-      }
-      n
-    } finally if (ownPlan) fresh.unpersist()
-  }
 
   /** Bucketed catalog table: pre-shuffles data into `nBuckets` by
     * `bucketCols` at write time so repeated joins/aggregations on that
@@ -122,32 +25,4 @@ object Tables {
       .sortBy(bucketCols.head, bucketCols.tail: _*)
       .format("parquet")
       .saveAsTable(tableName)
-
-  /** State-snapshot overwrite (one row per device) — K5. Write to a
-    * temp dir, park the old target aside, promote the temp, then drop
-    * the parked copy: there is never a moment with no valid state on
-    * disk (a crash mid-swap leaves either the old or the new state
-    * recoverable — unlike delete-then-rename, which has a window with
-    * neither). Uses Hadoop FileSystem rename, which is same-scheme
-    * safe on hdfs:// and file: (java.io.File.renameTo is not). */
-  def overwriteState(state: DataFrame, baseDir: String, table: String): Unit = {
-    val spark = state.sparkSession
-    val (fs, target) = hadoopPath(spark, path(baseDir, table))
-    val (_, tmp) = hadoopPath(spark, path(baseDir, s"_tmp_$table"))
-    val (_, old) = hadoopPath(spark, path(baseDir, s"_old_$table"))
-    recoverParkedState(spark, baseDir, table)
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    if (fs.exists(old)) fs.delete(old, true)
-    state.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    val hadTarget = fs.exists(target)
-    if (hadTarget && !fs.rename(target, old)) {
-      throw new java.io.IOException(s"state swap: parking old $table failed")
-    }
-    if (!fs.rename(tmp, target)) {
-      // Old state is still intact at `old` — restore it before failing.
-      if (hadTarget) fs.rename(old, target)
-      throw new java.io.IOException(s"state swap failed for $table")
-    }
-    if (hadTarget) fs.delete(old, true)
-  }
 }

@@ -2,8 +2,6 @@ package graft.streaming
 
 import graft.sources.Schemas.CleaningRecord
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 /** T5 — incremental record ingest (pipeline.py:673-752): fetch recent
   * records, keep those newer than the per-device watermark, append
@@ -25,20 +23,6 @@ object RecordSync {
     records
       .withWatermark("startTime", lateness)
       .dropDuplicatesWithinWatermark("deviceName", "startTime")
-
-  /** Wire the deduped stream to an append parquet sink with a
-    * checkpoint — the K1/K2 sink of SURVEY.md §2.1. */
-  def appendSink(
-      deduped: Dataset[CleaningRecord],
-      outDir: String,
-      checkpointDir: String,
-      trigger: Trigger = Trigger.AvailableNow()): DataStreamWriter[CleaningRecord] =
-    deduped.writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(trigger)
 
   /** T5 cold-start rule (pipeline.py:721-723): with no watermark yet,
     * ingest only the newest record per device. Batch-mode helper for

@@ -33,6 +33,17 @@ class OperatorCensusSpec extends AnyFunSuite {
       defPat.findFirstMatchIn(l).map(_.group(1))).toSeq
   }
 
+  /** Every main source file, as (file, its lines). */
+  private def mainSources: Seq[(java.io.File, Seq[String])] = {
+    def scalaFiles(d: java.io.File): Seq[java.io.File] =
+      d.listFiles.toSeq.flatMap(f =>
+        if (f.isDirectory) scalaFiles(f)
+        else if (f.getName.endsWith(".scala")) Seq(f) else Nil)
+    scalaFiles(new java.io.File("src/main")).map(f => f ->
+      new String(java.nio.file.Files.readAllBytes(f.toPath),
+        java.nio.charset.StandardCharsets.UTF_8).linesIterator.toSeq)
+  }
+
   test("operator census: source dir resolves from the test cwd") {
     assert(opsDir.isDirectory,
       s"expected ${opsDir.getAbsolutePath} — did the fork cwd move?")
@@ -55,16 +66,9 @@ class OperatorCensusSpec extends AnyFunSuite {
     // different subset of its conditions; operators ask
     // operators.DriverFold instead.
     val guard = """driverCap\s*>\s*0""".r
-    def scalaFiles(d: java.io.File): Seq[java.io.File] =
-      d.listFiles.toSeq.flatMap(f =>
-        if (f.isDirectory) scalaFiles(f)
-        else if (f.getName.endsWith(".scala")) Seq(f) else Nil)
-    val sites = scalaFiles(new java.io.File("src/main"))
-      .filter(_.getName != "DriverFold.scala")
-      .flatMap { f =>
-        val src = new String(java.nio.file.Files.readAllBytes(f.toPath),
-          java.nio.charset.StandardCharsets.UTF_8)
-        src.linesIterator.zipWithIndex.collect {
+    val sites = mainSources.filter(_._1.getName != "DriverFold.scala")
+      .flatMap { case (f, lines) =>
+        lines.zipWithIndex.collect {
           case (l, i) if guard.findFirstIn(l).isDefined =>
             s"${f.getName}:${i + 1}"
         }
@@ -72,6 +76,25 @@ class OperatorCensusSpec extends AnyFunSuite {
     assert(sites.isEmpty,
       s"hand-rolled driver-fold guard(s) — call DriverFold: " +
         sites.mkString(", "))
+  }
+
+  test("manifest version slots are claimed only by publish and compact") {
+    // Three hand-copied commit retry loops once drifted apart (only one
+    // checkpointed, only some cleaned up on abort); every write now
+    // claims its slot through ManifestTable's one publish step.
+    val member = """^  (?:private )?def (\w+).*""".r
+    val sites = mainSources.flatMap { case (f, lines) =>
+      lines.zipWithIndex.collect {
+        case (l, i) if l.contains("claimSlot(") && !l.contains("def claimSlot(") =>
+          val in = lines.take(i).reverse.collectFirst {
+            case member(n) => n }.getOrElse("?")
+          (s"${f.getName}:${i + 1} in $in", in)
+      }
+    }
+    val stray = sites.filterNot { case (_, in) => Set("publish", "compact")(in) }
+    assert(stray.isEmpty && sites.size == 2,
+      s"claimSlot( outside ManifestTable's publish step and compact: " +
+        stray.map(_._1).mkString(", ") + s" (all sites: ${sites.map(_._1)})")
   }
 
   test("no same-file redefinition outside the overload allowlist") {

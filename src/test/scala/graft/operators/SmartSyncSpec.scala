@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
-import graft.sources.Tables
+import graft.sources.ManifestTable
 import java.sql.Timestamp
 
 class SmartSyncSpec extends SparkSpec {
@@ -20,58 +20,9 @@ class SmartSyncSpec extends SparkSpec {
   private def consumables(t: String, devs: String*) =
     devs.map(d => (ts(t), d, 1000L)).toDF("timestamp", "deviceName", "mainBrush")
 
-  test("smart sync: first run syncs all devices, second run with same counters syncs none") {
-    val dir = java.nio.file.Files.createTempDirectory("smartsync").toString
-    val r1 = SmartSync.run(spark,
-      summaries("2024-01-01 10:00:00", "d1" -> 5L, "d2" -> 3L),
-      status("2024-01-01 10:00:00", "d1", "d2"),
-      consumables("2024-01-01 10:00:00", "d1", "d2"), dir)
-    assert(r1.devicesWithNewWork == 2 && r1.statusRows == 2 && r1.summaryRows == 2)
-
-    // Same counters again (e.g. retried cron tick) — full no-op.
-    val r2 = SmartSync.run(spark,
-      summaries("2024-01-01 22:00:00", "d1" -> 5L, "d2" -> 3L),
-      status("2024-01-01 22:00:00", "d1", "d2"),
-      consumables("2024-01-01 22:00:00", "d1", "d2"), dir)
-    assert(r2.devicesWithNewWork == 0 && r2.statusRows == 0
-      && r2.summaryRows == 0 && r2.consumablesRows == 0)
-
-    // One device cleaned again — only that device syncs.
-    val r3 = SmartSync.run(spark,
-      summaries("2024-01-02 10:00:00", "d1" -> 6L, "d2" -> 3L),
-      status("2024-01-02 10:00:00", "d1", "d2"),
-      consumables("2024-01-02 10:00:00", "d1", "d2"), dir)
-    assert(r3.devicesWithNewWork == 1 && r3.statusRows == 1)
-
-    // Sink contents: 2 + 0 + 1 status rows, state holds latest counters.
-    assert(Tables.read(spark, dir, "device_status").count() == 3)
-    val st = Tables.read(spark, dir, SmartSync.StateTable)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(st == Map("d1" -> 6L, "d2" -> 3L))
-  }
-
-  test("re-running an identical batch after a partial write appends nothing twice") {
-    val dir = java.nio.file.Files.createTempDirectory("smartsync2").toString
-    val sum = summaries("2024-01-01 10:00:00", "d1" -> 2L)
-    val stt = status("2024-01-01 10:00:00", "d1")
-    val con = consumables("2024-01-01 10:00:00", "d1")
-    SmartSync.run(spark, sum, stt, con, dir)
-    // Simulate crash-before-state-commit by wiping state, then rerun:
-    // appends must dedup on their keys (the reference would duplicate).
-    val stateDir = new java.io.File(Tables.path(dir, SmartSync.StateTable))
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm); f.delete() }
-    rm(stateDir)
-    val r = SmartSync.run(spark, sum, stt, con, dir)
-    assert(r.devicesWithNewWork == 1)
-    assert(r.statusRows == 0 && r.consumablesRows == 0 && r.summaryRows == 0)
-    assert(Tables.read(spark, dir, "device_status").count() == 1)
-  }
-
   test("transactional sync: counter filter + atomic commit + sealed sync ids") {
-    import graft.sources.ManifestTable
     val dir = java.nio.file.Files.createTempDirectory("smartsync-tx").toString
-    val r1 = SmartSync.runTransactional(spark,
+    val r1 = SmartSync.run(spark,
       summaries("2024-01-01 10:00:00", "d1" -> 5L, "d2" -> 3L),
       status("2024-01-01 10:00:00", "d1", "d2"),
       consumables("2024-01-01 10:00:00", "d1", "d2"), dir, "sync-001")
@@ -80,16 +31,24 @@ class SmartSyncSpec extends SparkSpec {
 
     // Re-running a committed sync id is a sealed no-op — even with a
     // different (e.g. re-polled) snapshot attached to the retry.
-    val r1b = SmartSync.runTransactional(spark,
+    val r1b = SmartSync.run(spark,
       summaries("2024-01-01 11:00:00", "d1" -> 9L),
       status("2024-01-01 11:00:00", "d1"),
       consumables("2024-01-01 11:00:00", "d1"), dir, "sync-001")
     assert(r1b == SmartSync.Result(0L, 0L, 0L, 0L))
     assert(ManifestTable.read(spark, dir, "device_status").count() == 2)
 
+    // Same counters under a NEW sync id (e.g. the next cron tick):
+    // nothing has new work, so nothing is written.
+    val r1c = SmartSync.run(spark,
+      summaries("2024-01-01 22:00:00", "d1" -> 5L, "d2" -> 3L),
+      status("2024-01-01 22:00:00", "d1", "d2"),
+      consumables("2024-01-01 22:00:00", "d1", "d2"), dir, "sync-001b")
+    assert(r1c == SmartSync.Result(0L, 0L, 0L, 0L))
+
     // Counter filter: only the advanced device syncs; state snapshot
     // replaces atomically and carries the unchanged device forward.
-    val r2 = SmartSync.runTransactional(spark,
+    val r2 = SmartSync.run(spark,
       summaries("2024-01-02 10:00:00", "d1" -> 6L, "d2" -> 3L),
       status("2024-01-02 10:00:00", "d1", "d2"),
       consumables("2024-01-02 10:00:00", "d1", "d2"), dir, "sync-002")
@@ -101,14 +60,13 @@ class SmartSyncSpec extends SparkSpec {
   }
 
   test("zero-work transactional sync still seals its sync id") {
-    import graft.sources.ManifestTable
     val dir = java.nio.file.Files.createTempDirectory("smartsync-tx0").toString
-    SmartSync.runTransactional(spark,
+    SmartSync.run(spark,
       summaries("2024-01-01 10:00:00", "d1" -> 5L),
       status("2024-01-01 10:00:00", "d1"),
       consumables("2024-01-01 10:00:00", "d1"), dir, "sync-001")
     // Same counters → nothing to write, but the attempt must be sealed.
-    val r0 = SmartSync.runTransactional(spark,
+    val r0 = SmartSync.run(spark,
       summaries("2024-01-01 22:00:00", "d1" -> 5L),
       status("2024-01-01 22:00:00", "d1"),
       consumables("2024-01-01 22:00:00", "d1"), dir, "sync-002")
@@ -116,14 +74,14 @@ class SmartSyncSpec extends SparkSpec {
     assert(ManifestTable.committedTxns(spark, dir).contains("sync-002"))
     // A retry of the sealed id against a FRESHER snapshot (d1 cleaned
     // again) must not process data under the already-completed id.
-    val rRetry = SmartSync.runTransactional(spark,
+    val rRetry = SmartSync.run(spark,
       summaries("2024-01-02 10:00:00", "d1" -> 6L),
       status("2024-01-02 10:00:00", "d1"),
       consumables("2024-01-02 10:00:00", "d1"), dir, "sync-002")
     assert(rRetry == SmartSync.Result(0L, 0L, 0L, 0L))
     assert(ManifestTable.read(spark, dir, "device_status").count() == 1)
     // A NEW id picks the fresh work up as usual.
-    val r3 = SmartSync.runTransactional(spark,
+    val r3 = SmartSync.run(spark,
       summaries("2024-01-02 10:00:00", "d1" -> 6L),
       status("2024-01-02 10:00:00", "d1"),
       consumables("2024-01-02 10:00:00", "d1"), dir, "sync-003")
@@ -134,12 +92,12 @@ class SmartSyncSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("smartsync3").toString
     SmartSync.run(spark, summaries("2024-01-01 10:00:00", "d1" -> 5L, "d2" -> 3L),
       status("2024-01-01 10:00:00", "d1", "d2"),
-      consumables("2024-01-01 10:00:00", "d1", "d2"), dir)
+      consumables("2024-01-01 10:00:00", "d1", "d2"), dir, "sync-001")
     // d2 offline in the next snapshot
     SmartSync.run(spark, summaries("2024-01-02 10:00:00", "d1" -> 7L),
       status("2024-01-02 10:00:00", "d1"),
-      consumables("2024-01-02 10:00:00", "d1"), dir)
-    val st = Tables.read(spark, dir, SmartSync.StateTable)
+      consumables("2024-01-02 10:00:00", "d1"), dir, "sync-002")
+    val st = ManifestTable.read(spark, dir, SmartSync.StateTable)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(st == Map("d1" -> 7L, "d2" -> 3L))
   }

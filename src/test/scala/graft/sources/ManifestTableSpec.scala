@@ -283,6 +283,24 @@ class ManifestTableSpec extends SparkSpec {
       ManifestTable.commit(Seq((10L, "v10")).toDF("id", "v"), base, "t", "txn-10")
       assert(logFiles("v\\d{20}").contains(f"v${10}%020d"))
       assert(ManifestTable.read(spark, base, "t").count() == 10L)
+
+      // A table kept only by rewrites and restores bounds its log too:
+      // every claimed multiple of compactEvery checkpoints, whichever
+      // op claimed it.
+      val rb = tmpBase()
+      def ckpts() = new java.io.File(s"$rb/_log").listFiles.map(_.getName)
+        .filter(_.matches("ckpt_v\\d{20}")).sorted.toSeq
+      ManifestTable.commit((1L to 8L).map(i => (i, s"v$i")).toDF("id", "v"),
+        rb, "t", "seed")                                                  // v1
+      (2 to 4).foreach(i => ManifestTable.upsertKeyed(spark, rb, "t",     // v2-v4
+        Seq((i.toLong, s"u$i")).toDF("id", "v"), "id", s"up-$i"))
+      assert(ckpts() == Seq(f"ckpt_v${4}%020d"))
+      (5 to 7).foreach(i => ManifestTable.deleteWhere(spark, rb, "t",     // v5-v7
+        org.apache.spark.sql.functions.col("id") === i.toLong, s"del-$i"))
+      assert(ManifestTable.read(spark, rb, "t").count() == 5L)
+      assert(ManifestTable.restore(spark, rb, "t", 4L, "restore-1") == 8L)
+      assert(ckpts() == Seq(f"ckpt_v${4}%020d", f"ckpt_v${8}%020d"))
+      assert(ManifestTable.read(spark, rb, "t").count() == 8L)
     } finally spark.conf.unset("graft.manifest.compactEvery")
   }
 
@@ -906,6 +924,8 @@ class ManifestTableSpec extends SparkSpec {
       .as[(Long, String)].collect().toSet
     assert(rows == Set((1L, "a"), (2L, "b"), (9L, "z")))
     assert(!ManifestTable.committedTxns(spark, base).contains("up-1"))
+    assert(ManifestTable.vacuum(spark, base, "t") == 0,
+      "the aborted upsert must delete the files it wrote")
     // Re-run against the current log: lands, and sees racer's row.
     assert(ManifestTable.upsertKeyed(spark, base, "t", delta, "id", "up-1")
       .isDefined)
@@ -932,11 +952,48 @@ class ManifestTableSpec extends SparkSpec {
       .as[(Long, String)].collect().toMap
     assert(rows.size == 10 && rows(5L) == "V5")
     assert(!ManifestTable.committedTxns(spark, base).contains("del-1"))
+    assert(ManifestTable.vacuum(spark, base, "t") == 0,
+      "the aborted deleteWhere must delete the files it wrote")
     // Re-run sees the new state and deletes through it.
     val res = ManifestTable.deleteWhere(spark, base, "t",
       org.apache.spark.sql.functions.col("id") <= 5L, "del-1")
     assert(res.exists(_.deletedRows == 5L))
     assert(ManifestTable.read(spark, base, "t").count() == 5L)
+  }
+
+  test("a commit whose txn another attempt sealed first returns Map() and " +
+      "deletes its files") {
+    val base = tmpBase()
+    val df = Seq((1L, "a")).toDF("id", "v")
+    // The same txn lands from a second attempt after this one's files
+    // are durable but before it claims a slot.
+    val n = ManifestTable.commitMulti(spark, base, "tx", appends = Map("t" -> df),
+      beforeCommit = () => { ManifestTable.commitMulti(spark, base, "tx",
+        appends = Map("t" -> df)); () })
+    assert(n.isEmpty)
+    assert(ManifestTable.read(spark, base, "t").count() == 1L)
+    assert(ManifestTable.vacuum(spark, base, "t") == 0)
+  }
+
+  test("a malformed compactEvery is refused by every writer, leaving no trace") {
+    val base = tmpBase()
+    ManifestTable.commit((1L to 4L).map(i => (i, s"v$i")).toDF("id", "v"),
+      base, "t", "seed")
+    val logDir = new java.io.File(s"$base/_log")
+    val logBefore = logDir.list().toSet
+    spark.conf.set("graft.manifest.compactEvery", "x")
+    try {
+      intercept[IllegalArgumentException] {
+        ManifestTable.commit(Seq((5L, "e")).toDF("id", "v"), base, "t", "app")
+      }
+      intercept[IllegalArgumentException] {
+        ManifestTable.deleteWhere(spark, base, "t",
+          org.apache.spark.sql.functions.col("id") <= 2L, "del")
+      }
+    } finally spark.conf.unset("graft.manifest.compactEvery")
+    assert(logDir.list().toSet == logBefore)
+    assert(ManifestTable.vacuum(spark, base, "t") == 0)
+    assert(ManifestTable.read(spark, base, "t").count() == 4L)
   }
 
   test("writes to a DIFFERENT table do not conflict with a rewrite") {
