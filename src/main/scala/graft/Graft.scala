@@ -22,6 +22,12 @@ object Graft {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // Local `file:` I/O through java.nio, not a chmod/readlink process
+      // per file (graft.sources.LocalFiles); other schemes are untouched.
+      .config("spark.hadoop.fs.file.impl",
+        classOf[graft.sources.LocalFiles.LocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[graft.sources.LocalFiles.LocalFs].getName)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * `src/state_manager.py:41-87`) as set-oriented Spark transforms.
   *
   * Scale: the state table is one row per key — always broadcast in the
-  * J1 join; the append-dedup anti-join shuffles only on the key.
+  * J1 join.
   */
 object Incremental {
 
@@ -43,12 +43,6 @@ object Incremental {
       .orderBy(col(tsCol).desc, col(tieBreak).desc)
     df.withColumn("rn", row_number().over(w)).filter(col("rn") === 1).drop("rn")
   }
-
-  /** T4/T5 idempotent append — drop rows whose (key, ts) already exist
-    * in the sink: a left-anti join, the set-oriented form of the
-    * reference's "only append records newer than last logged". */
-  def dedupAppend(batch: DataFrame, existing: DataFrame, keys: Seq[String]): DataFrame =
-    batch.join(existing.select(keys.map(col): _*).distinct(), keys, "left_anti")
 
   /** Keyed upsert (MERGE INTO semantics without a table format):
     * rows present in `updates` replace the current row for that key,

@@ -28,14 +28,6 @@ class IncrementalSpec extends SparkSpec {
       Seq(Seq("d1", 2L), Seq("d2", 3L)))
   }
 
-  test("dedupAppend is idempotent: appending the same batch twice adds nothing") {
-    val batch = Seq(("d1", ts("2024-01-01 10:00:00"), 1.0)).toDF("dev", "ts", "v")
-    val first = Incremental.dedupAppend(batch, batch.limit(0), Seq("dev", "ts"))
-    assert(first.count() == 1)
-    val second = Incremental.dedupAppend(batch, first, Seq("dev", "ts"))
-    assert(second.count() == 0)
-  }
-
   test("afterWatermark keeps strictly-newer rows (pipeline.py:725)") {
     val df = Seq(
       ("d1", ts("2024-01-01 10:00:00")),

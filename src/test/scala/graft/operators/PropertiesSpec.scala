@@ -20,18 +20,6 @@ class PropertiesSpec extends SparkSpec {
     }
   }
 
-  test("dedupAppend twice == dedupAppend once (idempotent sync), random batches") {
-    (1 to 3).foreach { _ =>
-      val pairs = List.fill(30)((s"d${rnd.nextInt(3)}", rnd.nextInt(40)))
-      val batch = pairs.toDF("dev", "seq")
-      val existing = pairs.take(pairs.size / 2).toDF("dev", "seq")
-      val once = Incremental.dedupAppend(batch, existing, Seq("dev", "seq"))
-      val appended = existing.union(once)
-      val twice = Incremental.dedupAppend(batch, appended, Seq("dev", "seq"))
-      assert(twice.count() == 0)
-    }
-  }
-
   test("minhash similarity estimate tracks exact jaccard (random shuffled docs)") {
     val base = (1 to 40).map(i => s"tok$i")
     val docs = (0 until 8).map { i =>
