@@ -309,7 +309,7 @@ object GraftExpressions {
       val m = new java.util.HashMap[String, Integer](merges.size * 2)
       merges.zipWithIndex.foreach { case ((a, b), i) =>
         // First (lowest) rank wins if a pair is listed twice.
-        m.putIfAbsent(a + " " + b, i)
+        m.putIfAbsent(a + "\u0000" + b, i)
       }
       m
     }
@@ -329,7 +329,7 @@ object GraftExpressions {
         var bestRank = Int.MaxValue
         var j = 0
         while (j < syms.size - 1) {
-          val r = rank.get(syms.get(j) + " " + syms.get(j + 1))
+          val r = rank.get(syms.get(j) + "\u0000" + syms.get(j + 1))
           if (r != null && r < bestRank) bestRank = r
           j += 1
         }

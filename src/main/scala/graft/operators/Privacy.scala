@@ -225,7 +225,7 @@ object Privacy {
     require(epsilon > 0, "epsilon must be positive")
     require(dims.nonEmpty, "at least one grouping column")
     val keyStr = concat_ws(":", lit(tag) +:
-      dims.map(d => coalesce(col(d).cast("string"), lit(" "))): _*)
+      dims.map(d => coalesce(col(d).cast("string"), lit("\u0000"))): _*)
     val u = (graft.functions.TextFunctions.hash60(keyStr) + lit(1L))
       .cast("double") / lit(1152921504606846976L).cast("double") // 2^60
     val v = u - lit(0.5)

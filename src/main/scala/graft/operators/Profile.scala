@@ -921,7 +921,7 @@ object Profile {
     * (no window): state per det is one struct. Output: (det, n_rows,
     * n_distinct_dep, top_dep string, top_share_micro, fd_holds). */
   def fdCensus(df: DataFrame, detCol: String, depCol: String): DataFrame = {
-    val dep = coalesce(col(depCol).cast("string"), lit(" NULL"))
+    val dep = coalesce(col(depCol).cast("string"), lit("\u0000NULL"))
     df.groupBy(col(detCol), dep.as("__dep"))
       .agg(count(lit(1)).as("__c"))
       .groupBy(col(detCol))

@@ -665,6 +665,12 @@ object Sketches {
   /** 2^60 — the hash60 space width, embedded identically in oracles. */
   val KmvSpace: Double = math.pow(2.0, 60)
 
+  /** The KMV sketch size bound, checked by [[kmvSketch]] and by every
+    * caller that must refuse a bad `k` before any Spark work starts
+    * (a streaming sink would otherwise fail on its first batch). */
+  private[graft] def requireKmvK(k: Int): Unit =
+    require(k >= 2 && k <= 65536, "k must be in [2, 65536]")
+
   /** The sketch STATE: per group, the `k` smallest distinct hash60
     * values of `key` with ranks — built by one distinct + one
     * bounded-heap aggregate ([[Ranking.groupTopK]]), O(k) state per
@@ -675,7 +681,7 @@ object Sketches {
       key: Column,
       groupCols: Seq[String],
       k: Int): DataFrame = {
-    require(k >= 2 && k <= 65536, "k must be in [2, 65536]")
+    requireKmvK(k)
     val hashes = df
       .select(groupCols.map(col) :+
         graft.functions.TextFunctions.hash60(key).as("h"): _*)

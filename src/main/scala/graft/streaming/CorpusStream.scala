@@ -1,7 +1,8 @@
 package graft.streaming
 
 import graft.functions.TextFunctions
-import org.apache.spark.sql.DataFrame
+import graft.sources.ManifestTable
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
@@ -63,54 +64,22 @@ object CorpusStream {
     dedupByContent(gated, tsCol, textCol, lateness)
   }
 
-  /** Wire a cleaned stream to an append parquet sink with a checkpoint
-    * — exactly-once via checkpoint offsets + the sink's transaction
-    * log (the K1/K2 idiom of SURVEY §2.1). */
-  def appendSink(
-      cleaned: DataFrame,
-      outDir: String,
-      checkpointDir: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    cleaned.writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-
   /** Land a stream in a [[graft.sources.ManifestTable]] with REAL
-    * exactly-once: each micro-batch commits under the deterministic
-    * txn id `<streamId>-<batchId>`, so a batch replayed after a crash
-    * (checkpoint offsets are written AFTER the sink runs — replays are
-    * in-contract) is a recorded no-op instead of a duplicate append.
-    * This closes the gap the plain parquet sink leaves (its _spark
-    * _metadata dedup is sink-local and breaks under mixed writers) and
-    * gives streaming ingest the same table features as batch commits:
-    * file stats for skip-reads, schema tracking, time travel, vacuum.
-    *
-    * `streamId` must be unique per logical stream WRITING TO THIS BASE
-    * DIR (two streams with the same id would seal each other's batch
-    * ids); batch ids restart from the checkpoint, so crash-rerun keeps
-    * the same ids — exactly what the txn log needs. Empty micro-batches
-    * commit nothing (replaying emptiness is harmless). */
+    * exactly-once ([[ManifestSink]]: each micro-batch appends under the
+    * txn id `<streamId>-<batchId>`, so a crash replay is a sealed
+    * no-op instead of a duplicate append; `streamId` must be unique
+    * per stream writing to `baseDir`). Streaming ingest gets the same
+    * table features as batch commits: file stats for skip-reads,
+    * schema tracking, time travel, vacuum. */
   def manifestSink(
       cleaned: DataFrame,
       baseDir: String,
       table: String,
       streamId: String,
-      checkpointDir: String): DataStreamWriter[org.apache.spark.sql.Row] = {
-    require(streamId.nonEmpty && !streamId.contains("\n"),
-      s"bad streamId: $streamId")
-    cleaned.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          if (!batch.isEmpty)
-            graft.sources.ManifestTable.commit(
-              batch, baseDir, table, txnId = s"$streamId-$batchId")
-          ()
-      }
-  }
+      checkpointDir: String): DataStreamWriter[Row] =
+    ManifestSink(cleaned, baseDir, streamId, checkpointDir) {
+      (batch, _, commit) => commit(appends = Map(table -> batch))
+    }
 
   /** A SELF-DEDUPLICATING corpus: each micro-batch is near-dup-checked
     * against everything already landed ([[graft.operators.Dedup
@@ -131,35 +100,22 @@ object CorpusStream {
       table: String,
       streamId: String,
       checkpointDir: String,
-      threshold: Double = 0.6): DataStreamWriter[org.apache.spark.sql.Row] = {
-    require(streamId.nonEmpty && !streamId.contains("\n"),
-      s"bad streamId: $streamId")
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          if (!batch.isEmpty) {
-            val spark = batch.sparkSession
-            // The already-landed corpus; on the very first batch the
-            // table does not exist yet — an empty frame with the
-            // batch's schema dedups against nothing.
-            val corpus = graft.sources.ManifestTable.read(
-              spark, baseDir, table, schema = Some(batch.schema))
-            val keep = graft.operators.Dedup
-              .dedupIncrement(batch.toDF(), corpus, idCol, textCol,
-                threshold = threshold)
-              .filter(org.apache.spark.sql.functions.col("keep"))
-              .select(idCol)
-            val survivors = batch.join(keep, Seq(idCol), "left_semi")
-            if (!survivors.isEmpty)
-              graft.sources.ManifestTable.commit(
-                survivors, baseDir, table, txnId = s"$streamId-$batchId")
-          }
-          ()
-      }
-  }
+      threshold: Double = 0.6): DataStreamWriter[Row] =
+    ManifestSink(docs, baseDir, streamId, checkpointDir) {
+      (batch, _, commit) =>
+        // The already-landed corpus; on the very first batch the table
+        // does not exist yet — an empty frame with the batch's schema
+        // dedups against nothing.
+        val corpus = ManifestTable.read(
+          batch.sparkSession, baseDir, table, schema = Some(batch.schema))
+        val keep = graft.operators.Dedup
+          .dedupIncrement(batch, corpus, idCol, textCol,
+            threshold = threshold)
+          .filter(col("keep"))
+          .select(idCol)
+        val survivors = batch.join(keep, Seq(idCol), "left_semi")
+        if (!survivors.isEmpty) commit(appends = Map(table -> survivors))
+    }
 
   /** [[lmGatedSink]] with the bar set by the DATA instead of a frozen
     * constant: the stream maintains a mergeable log-linear histogram
@@ -193,76 +149,65 @@ object CorpusStream {
       table: String,
       sketchTable: String,
       streamId: String,
-      checkpointDir: String): DataStreamWriter[org.apache.spark.sql.Row] = {
+      checkpointDir: String): DataStreamWriter[Row] = {
     require(keepFrac > 0.0 && keepFrac <= 1.0, "keepFrac must be in (0, 1]")
-    require(streamId.nonEmpty && !streamId.contains("\n"),
-      s"bad streamId: $streamId")
     require(table != sketchTable, "data and sketch tables must differ")
     import graft.operators.{Corpus, Dedup, Sketches}
     val model = Corpus.LmModel(Dedup.truncate(model0.uni),
       Dedup.truncate(model0.bigrams), Dedup.truncate(model0.vocab))
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          if (!batch.isEmpty) {
-            val spark = batch.sparkSession
-            val scored = Corpus.lmScore(batch.toDF(), model, idCol, textCol)
-              .select(col(idCol),
-                round(col("nll") * 1e6).cast("long").as("__nll_micro"))
-              .persist()
-            try {
-              val delta = Sketches.lhBuckets(scored, col("__nll_micro"), Nil)
-              val current = graft.sources.ManifestTable.read(
-                spark, baseDir, sketchTable, schema = Some(delta.schema))
-              val merged = current.unionByName(delta)
-                .groupBy(col("idx")).agg(sum(col("cnt")).as("cnt"))
-                .persist()
-              try {
-                // The state is ≤ ~488 rows by construction — the
-                // driver holds the SKETCH (the model-at-driver stance
-                // of Corpus.bpeTrain), never the data.
-                val st = merged.collect()
-                  .map(r => (r.getAs[Int]("idx"), r.getAs[Long]("cnt")))
-                  .sortBy(_._1)
-                if (st.isEmpty) {
-                  // No doc in this batch (or any before it) carried a
-                  // bigram: there is no distribution to gate against
-                  // and nothing to land (no-evidence docs drop, as in
-                  // lmGatedSink). Still SEAL the txn — otherwise a
-                  // crash-replay of this batch would re-run forever
-                  // (a poison batch the stream can never pass).
-                  graft.sources.ManifestTable.commitMulti(
-                    spark, baseDir, txnId = s"$streamId-$batchId")
-                } else {
-                  val target = math.ceil(
-                    keepFrac * st.iterator.map(_._2).sum).toLong
-                  var cum = 0L
-                  val barIdx = st.find { case (_, c) =>
-                    cum += c; cum >= target }.get._1
-                  val bar = spark.range(1)
-                    .select(Sketches.lhBucketHi(lit(barIdx))).head()
-                    .getLong(0)
-                  val keep = scored.filter(col("__nll_micro") <= bar)
-                    .select(idCol)
-                  val survivors = batch.join(keep, Seq(idCol), "left_semi")
-                  // One manifest: corpus append + sketch snapshot. An
-                  // all-dropped batch still commits the sketch update —
-                  // rejected traffic must keep moving the bar.
-                  graft.sources.ManifestTable.commitMulti(
-                    spark, baseDir, txnId = s"$streamId-$batchId",
-                    appends =
-                      if (survivors.isEmpty) Map.empty
-                      else Map(table -> survivors),
-                    snapshots = Map(sketchTable -> merged))
-                }
-              } finally merged.unpersist()
-            } finally scored.unpersist()
-          }
-          ()
-      }
+    ManifestSink(docs, baseDir, streamId, checkpointDir) {
+      (batch, _, commit) =>
+        val spark = batch.sparkSession
+        val scored = Corpus.lmScore(batch, model, idCol, textCol)
+          .select(col(idCol),
+            round(col("nll") * 1e6).cast("long").as("__nll_micro"))
+          .persist()
+        try {
+          val delta = Sketches.lhBuckets(scored, col("__nll_micro"), Nil)
+          val current = ManifestTable.read(
+            spark, baseDir, sketchTable, schema = Some(delta.schema))
+          val merged = current.unionByName(delta)
+            .groupBy(col("idx")).agg(sum(col("cnt")).as("cnt"))
+            .persist()
+          try {
+            // The state is ≤ ~488 rows by construction — the driver
+            // holds the SKETCH (the model-at-driver stance of
+            // Corpus.bpeTrain), never the data.
+            val st = merged.collect()
+              .map(r => (r.getAs[Int]("idx"), r.getAs[Long]("cnt")))
+              .sortBy(_._1)
+            if (st.isEmpty) {
+              // No doc in this batch (or any before it) carried a
+              // bigram: there is no distribution to gate against and
+              // nothing to land (no-evidence docs drop, as in
+              // lmGatedSink). Still SEAL the txn — otherwise a
+              // crash-replay of this batch would re-run forever (a
+              // poison batch the stream can never pass).
+              commit()
+            } else {
+              val target = math.ceil(
+                keepFrac * st.iterator.map(_._2).sum).toLong
+              var cum = 0L
+              val barIdx = st.find { case (_, c) =>
+                cum += c; cum >= target }.get._1
+              val bar = spark.range(1)
+                .select(Sketches.lhBucketHi(lit(barIdx))).head()
+                .getLong(0)
+              val keep = scored.filter(col("__nll_micro") <= bar)
+                .select(idCol)
+              val survivors = batch.join(keep, Seq(idCol), "left_semi")
+              // One manifest: corpus append + sketch snapshot. An
+              // all-dropped batch still commits the sketch update —
+              // rejected traffic must keep moving the bar.
+              commit(
+                appends =
+                  if (survivors.isEmpty) Map.empty
+                  else Map(table -> survivors),
+                snapshots = Map(sketchTable -> merged))
+            }
+          } finally merged.unpersist()
+        } finally scored.unpersist()
+    }
   }
 
   /** Land a stream gated by a FROZEN bigram LM — the CCNet deployment
@@ -285,34 +230,22 @@ object CorpusStream {
       baseDir: String,
       table: String,
       streamId: String,
-      checkpointDir: String): DataStreamWriter[org.apache.spark.sql.Row] = {
-    require(streamId.nonEmpty && !streamId.contains("\n"),
-      s"bad streamId: $streamId")
+      checkpointDir: String): DataStreamWriter[Row] = {
     // Freeze the model ONCE at wiring time: the three frames are plans,
-    // and foreachBatch would otherwise re-run the training aggregates
-    // on every micro-batch (and against whatever the training input
-    // has become — a silently drifting gate).
+    // and each micro-batch would otherwise re-run the training
+    // aggregates (and against whatever the training input has become —
+    // a silently drifting gate).
     import graft.operators.{Corpus, Dedup}
     val model = Corpus.LmModel(Dedup.truncate(model0.uni),
       Dedup.truncate(model0.bigrams), Dedup.truncate(model0.vocab))
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          if (!batch.isEmpty) {
-            val keep = graft.operators.Corpus
-              .lmScore(batch.toDF(), model, idCol, textCol)
-              .filter(col("nll") <= maxNll)
-              .select(idCol)
-            val survivors = batch.join(keep, Seq(idCol), "left_semi")
-            if (!survivors.isEmpty)
-              graft.sources.ManifestTable.commit(
-                survivors, baseDir, table, txnId = s"$streamId-$batchId")
-          }
-          ()
-      }
+    ManifestSink(docs, baseDir, streamId, checkpointDir) {
+      (batch, _, commit) =>
+        val keep = Corpus.lmScore(batch, model, idCol, textCol)
+          .filter(col("nll") <= maxNll)
+          .select(idCol)
+        val survivors = batch.join(keep, Seq(idCol), "left_semi")
+        if (!survivors.isEmpty) commit(appends = Map(table -> survivors))
+    }
   }
 
   /** Stream-land an embedding corpus WITH its incrementally-maintained
@@ -338,29 +271,18 @@ object CorpusStream {
       table: String,
       indexTable: String,
       streamId: String,
-      checkpointDir: String): DataStreamWriter[org.apache.spark.sql.Row] = {
-    require(streamId.nonEmpty && !streamId.contains("\n"),
-      s"bad streamId: $streamId")
+      checkpointDir: String): DataStreamWriter[Row] = {
     require(table != indexTable, "corpus and index tables must differ")
-    // Pin the centroids ONCE at wiring time (they are a plan;
-    // foreachBatch would otherwise re-derive them per micro-batch —
-    // and against drifting inputs, silently re-routing cells).
+    // Pin the centroids ONCE at wiring time (they are a plan; each
+    // micro-batch would otherwise re-derive them — and against drifting
+    // inputs, silently re-routing cells).
     val frozen = graft.operators.Dedup.truncate(centroids)
-    vecs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          if (!batch.isEmpty) {
-            // nCentroids is unused when centroids are supplied.
-            val assigned = graft.operators.Similarity.ivfIndex(
-              batch.toDF(), idCol, vecCol, nCentroids = 0, Some(frozen))
-            graft.sources.ManifestTable.commitMulti(
-              batch.sparkSession, baseDir, txnId = s"$streamId-$batchId",
-              appends = Map(table -> batch.toDF(), indexTable -> assigned))
-          }
-          ()
-      }
+    ManifestSink(vecs, baseDir, streamId, checkpointDir) {
+      (batch, _, commit) =>
+        // nCentroids is unused when centroids are supplied.
+        val assigned = graft.operators.Similarity.ivfIndex(
+          batch, idCol, vecCol, nCentroids = 0, Some(frozen))
+        commit(appends = Map(table -> batch, indexTable -> assigned))
+    }
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.streaming.DataStreamWriter
 
 /** Streaming histogram-distance drift pager — [[PsiStream]]'s shape
@@ -34,42 +33,12 @@ object HistDriftStream {
       baseDir: String,
       table: String,
       streamId: String,
-      checkpointDir: String): DataStreamWriter[org.apache.spark.sql.Row] = {
+      checkpointDir: String): DataStreamWriter[Row] = {
     require(alarmHellingerMicro > 0, "alarmHellingerMicro must be positive")
-    require(streamId.nonEmpty && !streamId.contains("\n"),
-      s"bad streamId: $streamId")
-    val base = graft.operators.Dedup.truncate(
-      baseline.select(col(groupCol).as("__g"), col(binCol).as("__b"),
-        col("n").cast("long").as("__ca")))
-    input.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          if (!batch.isEmpty) {
-            val cur = batch.toDF()
-              .filter(col(binCol).isNotNull)
-              .select(col(groupCol).as("__g"), col(binCol).as("__b"))
-              .groupBy(col("__g"), col("__b"))
-              .agg(count(lit(1)).as("__cb"))
-            val cells = base.join(cur, Seq("__g", "__b"), "full_outer")
-              .select(col("__g"),
-                coalesce(col("__ca"), lit(0L)).as("__ca"),
-                coalesce(col("__cb"), lit(0L)).as("__cb"))
-            val verdicts = graft.operators.Profile
-              .histDistancesFromCells(cells)
-              .select(col("__g").as(groupCol),
-                lit(batchId).as("batch_id"),
-                col("n_b").as("n_rows"), col("tv_micro"),
-                col("bc_micro"), col("hellinger_micro"),
-                (col("hellinger_micro").isNotNull &&
-                  col("hellinger_micro") >= alarmHellingerMicro)
-                  .as("alarm"))
-            graft.sources.ManifestTable.commit(
-              verdicts, baseDir, table, txnId = s"$streamId-$batchId")
-          }
-          ()
-      }
+    PsiStream.baselineDriftSink(input, baseline, groupCol, binCol, baseDir,
+      table, streamId, checkpointDir)(
+      graft.operators.Profile.histDistancesFromCells,
+      Seq("tv_micro", "bc_micro", "hellinger_micro"), "hellinger_micro",
+      alarmHellingerMicro)
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
@@ -33,38 +33,56 @@ object PsiStream {
       baseDir: String,
       table: String,
       streamId: String,
-      checkpointDir: String): DataStreamWriter[org.apache.spark.sql.Row] = {
+      checkpointDir: String): DataStreamWriter[Row] = {
     require(alarmMicro > 0, "alarmMicro must be positive")
-    require(streamId.nonEmpty && !streamId.contains("\n"),
-      s"bad streamId: $streamId")
+    baselineDriftSink(input, baseline, groupCol, binCol, baseDir, table,
+      streamId, checkpointDir)(
+      graft.operators.Profile.psiFromCells, Seq("psi_micro"), "psi_micro",
+      alarmMicro)
+  }
+
+  /** The frozen-baseline drift pager shared with [[HistDriftStream]]:
+    * the baseline (group, bin, n) counts are pinned once at wiring
+    * time; each micro-batch's non-null bins are counted per (group,
+    * bin) and full-outer joined to the baseline into `(__g, __b, __ca,
+    * __cb)` cells, which `score` turns into per-group `n_b` and
+    * `metrics`. One verdict row per (group, batch) — (groupCol,
+    * batch_id, n_rows, metrics…, alarm), alarm when `alarmCol` is at
+    * or above `alarmMicro` — appends under the batch's [[ManifestSink]]
+    * txn id. */
+  private[streaming] def baselineDriftSink(
+      input: DataFrame,
+      baseline: DataFrame,
+      groupCol: String,
+      binCol: String,
+      baseDir: String,
+      table: String,
+      streamId: String,
+      checkpointDir: String)(
+      score: DataFrame => DataFrame,
+      metrics: Seq[String],
+      alarmCol: String,
+      alarmMicro: Long): DataStreamWriter[Row] = {
     val base = graft.operators.Dedup.truncate(
       baseline.select(col(groupCol).as("__g"), col(binCol).as("__b"),
         col("n").cast("long").as("__ca")))
-    input.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          if (!batch.isEmpty) {
-            val cur = batch.toDF()
-              .filter(col(binCol).isNotNull)
-              .select(col(groupCol).as("__g"), col(binCol).as("__b"))
-              .groupBy(col("__g"), col("__b"))
-              .agg(count(lit(1)).as("__cb"))
-            val cells = base.join(cur, Seq("__g", "__b"), "full_outer")
-              .select(col("__g"), col("__b"),
-                coalesce(col("__ca"), lit(0L)).as("__ca"),
-                coalesce(col("__cb"), lit(0L)).as("__cb"))
-            val verdicts = graft.operators.Profile.psiFromCells(cells)
-              .select(col("__g").as(groupCol), lit(batchId).as("batch_id"),
-                col("n_b").as("n_rows"), col("psi_micro"),
-                (col("psi_micro").isNotNull &&
-                  col("psi_micro") >= alarmMicro).as("alarm"))
-            graft.sources.ManifestTable.commit(
-              verdicts, baseDir, table, txnId = s"$streamId-$batchId")
-          }
-          ()
-      }
+    val alarmOn = col(alarmCol)
+    ManifestSink(input, baseDir, streamId, checkpointDir) {
+      (batch, batchId, commit) =>
+        val cur = batch
+          .filter(col(binCol).isNotNull)
+          .select(col(groupCol).as("__g"), col(binCol).as("__b"))
+          .groupBy(col("__g"), col("__b"))
+          .agg(count(lit(1)).as("__cb"))
+        val cells = base.join(cur, Seq("__g", "__b"), "full_outer")
+          .select(col("__g"), col("__b"),
+            coalesce(col("__ca"), lit(0L)).as("__ca"),
+            coalesce(col("__cb"), lit(0L)).as("__cb"))
+        val verdicts = score(cells)
+          .select((Seq(col("__g").as(groupCol), lit(batchId).as("batch_id"),
+              col("n_b").as("n_rows")) ++ metrics.map(col) :+
+            (alarmOn.isNotNull && alarmOn >= alarmMicro).as("alarm")): _*)
+        commit(appends = Map(table -> verdicts))
+    }
   }
 }

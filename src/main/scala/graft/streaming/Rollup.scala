@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import graft.sources.ManifestTable
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
@@ -37,7 +38,7 @@ object Rollup {
       baseDir: String,
       table: String,
       streamId: String,
-      checkpointDir: String): DataStreamWriter[org.apache.spark.sql.Row] =
+      checkpointDir: String): DataStreamWriter[Row] =
     sumCountSink(points.select(
         graft.operators.Spatial.quadkeyCol(xCol, yCol, extent, levels)
           .as("quadkey")),
@@ -72,35 +73,50 @@ object Rollup {
       baseDir: String,
       table: String,
       streamId: String,
-      checkpointDir: String): DataStreamWriter[org.apache.spark.sql.Row] = {
+      checkpointDir: String): DataStreamWriter[Row] =
+    mergeSink(rows, keyCols, baseDir, table, streamId, checkpointDir)(
+      sumCountDelta(_, keyCols, sumCols), sumCountMerge(_, keyCols, sumCols))
+
+  /** The mergeable-state sink every single-snapshot rollup here shares:
+    * each micro-batch's `delta` state is unioned with the current
+    * snapshot (read under the delta's schema, so the first batch merges
+    * against an empty table), `merge`d, and committed as the table's
+    * next snapshot under the batch's [[ManifestSink]] txn id. */
+  private def mergeSink(
+      rows: DataFrame,
+      keyCols: Seq[String],
+      baseDir: String,
+      table: String,
+      streamId: String,
+      checkpointDir: String)(
+      delta: DataFrame => DataFrame,
+      merge: DataFrame => DataFrame): DataStreamWriter[Row] = {
     require(keyCols.nonEmpty, "need at least one key column")
-    require(streamId.nonEmpty && !streamId.contains("\n"),
-      s"bad streamId: $streamId")
-    val sumNames = sumCols.map(c => s"sum_$c")
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          if (!batch.isEmpty) {
-            val spark = batch.sparkSession
-            val delta = batch.groupBy(keyCols.map(col): _*)
-              .agg(count(lit(1)).as("n_rows"),
-                sumCols.map(c => sum(col(c)).as(s"sum_$c")): _*)
-            val current = graft.sources.ManifestTable.read(
-              spark, baseDir, table, schema = Some(delta.schema))
-            val merged = current.unionByName(delta)
-              .groupBy(keyCols.map(col): _*)
-              .agg(sum(col("n_rows")).as("n_rows"),
-                sumNames.map(c => sum(col(c)).as(c)): _*)
-            graft.sources.ManifestTable.commitMulti(
-              spark, baseDir, txnId = s"$streamId-$batchId",
-              snapshots = Map(table -> merged))
-          }
-          ()
-      }
+    ManifestSink(rows, baseDir, streamId, checkpointDir) {
+      (batch, _, commit) =>
+        val d = delta(batch)
+        val current = ManifestTable.read(
+          batch.sparkSession, baseDir, table, schema = Some(d.schema))
+        commit(snapshots = Map(table -> merge(current.unionByName(d))))
+    }
   }
+
+  /** A batch's per-key (n_rows, sum_<c>…) partial — the (sum, count)
+    * delta state. */
+  private def sumCountDelta(
+      rows: DataFrame, keyCols: Seq[String], sumCols: Seq[String])
+      : DataFrame =
+    rows.groupBy(keyCols.map(col): _*)
+      .agg(count(lit(1)).as("n_rows"),
+        sumCols.map(c => sum(col(c)).as(s"sum_$c")): _*)
+
+  /** Sum-merge (n_rows, sum_<c>…) states by key. */
+  private def sumCountMerge(
+      states: DataFrame, keyCols: Seq[String], sumCols: Seq[String])
+      : DataFrame =
+    states.groupBy(keyCols.map(col): _*)
+      .agg(sum(col("n_rows")).as("n_rows"),
+        sumCols.map(c => sum(col(s"sum_$c")).as(s"sum_$c")): _*)
 
   /** Incrementally maintain a (sum, count) rollup from an upstream
     * MANIFEST TABLE's change feed — the batch-poll twin of
@@ -183,7 +199,6 @@ object Rollup {
       }
     val sign = when(col("_change_type") === "insert", lit(1L))
       .otherwise(lit(-1L))
-    val sumNames = sumCols.map(c => s"sum_$c")
     // The snapshot's schema: the per-window delta aggregate's (resolved
     // only, never run), so the signed rows and the merge below keep
     // exactly the column types the rollup has always had.
@@ -195,10 +210,7 @@ object Rollup {
         .map { case (c, f) => c.cast(f.dataType).as(f.name) }: _*)
     val current = ManifestTable.read(
       spark, rollupBase, rollupTable, schema = Some(deltaSchema))
-    val merged = current.unionByName(signed)
-      .groupBy(keyCols.map(col): _*)
-      .agg(sum(col("n_rows")).as("n_rows"),
-        sumNames.map(c => sum(col(c)).as(c)): _*)
+    val merged = sumCountMerge(current.unionByName(signed), keyCols, sumCols)
       .filter(col("n_rows") > 0L)
     ManifestTable.commitMulti(spark, rollupBase, txnId,
       snapshots = Map(rollupTable -> merged),
@@ -236,73 +248,55 @@ object Rollup {
       table: String,
       streamId: String,
       checkpointDir: String,
-      nParts: Int = 16): DataStreamWriter[org.apache.spark.sql.Row] = {
+      nParts: Int = 16): DataStreamWriter[Row] = {
     require(keyCols.nonEmpty, "need at least one key column")
     require(nParts > 0, "nParts must be positive")
-    require(streamId.nonEmpty && !streamId.contains("\n"),
-      s"bad streamId: $streamId")
-    val sumNames = sumCols.map(c => s"sum_$c")
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          if (!batch.isEmpty) {
-            val spark = batch.sparkSession
-            // The key→partition map is part of the TABLE, not the job:
-            // a restart with a different nParts would re-hash keys
-            // into different subtables and silently split their sums.
-            // A 1-row marker subtable records the layout; mismatch
-            // fails the stream instead of corrupting it.
-            val markerT = s"$table.nparts"
-            val markerSchema = org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("n_parts",
-                org.apache.spark.sql.types.IntegerType)))
-            val recorded = graft.sources.ManifestTable.read(
-                spark, baseDir, markerT, schema = Some(markerSchema))
-              .collect().headOption
-            recorded.foreach { r =>
-              require(r.getInt(0) == nParts,
-                s"$table was partitioned with nParts=${r.getInt(0)}; " +
-                  s"restarting with $nParts would re-hash keys — " +
-                  "use the recorded value")
-            }
-            val delta = batch.groupBy(keyCols.map(col): _*)
-              .agg(count(lit(1)).as("n_rows"),
-                sumCols.map(c => sum(col(c)).as(s"sum_$c")): _*)
-              .withColumn("__part", partOf(keyCols, nParts))
-              .persist()
-            try {
-              val touched = delta.select(col("__part")).distinct()
-                .collect().map(_.getInt(0)).sorted
-              val snaps = touched.map { p =>
-                val part = delta.filter(col("__part") === p).drop("__part")
-                val current = graft.sources.ManifestTable.read(
-                  spark, baseDir, s"$table.p$p", schema = Some(part.schema))
-                s"$table.p$p" -> current.unionByName(part)
-                  .groupBy(keyCols.map(col): _*)
-                  .agg(sum(col("n_rows")).as("n_rows"),
-                    sumNames.map(c => sum(col(c)).as(c)): _*)
-              }.toMap
-              // The marker never changes once written: re-committing
-              // it every batch would add a data file + manifest entry
-              // per micro-batch for a constant. Write it only while
-              // the read-back finds none (first batch, or a replay of
-              // a failed first commit — sealed-txn dedup makes the
-              // true-replay case a no-op anyway).
-              val marker = spark.range(0, 1, 1, numPartitions = 1)
-                .select(lit(nParts).cast("int").as("n_parts"))
-              val snapshots =
-                if (recorded.isDefined) snaps
-                else snaps + (markerT -> marker)
-              graft.sources.ManifestTable.commitMulti(
-                spark, baseDir, txnId = s"$streamId-$batchId",
-                snapshots = snapshots)
-            } finally delta.unpersist()
-          }
-          ()
-      }
+    ManifestSink(rows, baseDir, streamId, checkpointDir) {
+      (batch, _, commit) =>
+        val spark = batch.sparkSession
+        // The key→partition map is part of the TABLE, not the job: a
+        // restart with a different nParts would re-hash keys into
+        // different subtables and silently split their sums. A 1-row
+        // marker subtable records the layout; mismatch fails the stream
+        // instead of corrupting it.
+        val markerT = s"$table.nparts"
+        val markerSchema = org.apache.spark.sql.types.StructType(Seq(
+          org.apache.spark.sql.types.StructField("n_parts",
+            org.apache.spark.sql.types.IntegerType)))
+        val recorded = ManifestTable.read(
+            spark, baseDir, markerT, schema = Some(markerSchema))
+          .collect().headOption
+        recorded.foreach { r =>
+          require(r.getInt(0) == nParts,
+            s"$table was partitioned with nParts=${r.getInt(0)}; " +
+              s"restarting with $nParts would re-hash keys — " +
+              "use the recorded value")
+        }
+        val delta = sumCountDelta(batch, keyCols, sumCols)
+          .withColumn("__part", partOf(keyCols, nParts))
+          .persist()
+        try {
+          val touched = delta.select(col("__part")).distinct()
+            .collect().map(_.getInt(0)).sorted
+          val snaps = touched.map { p =>
+            val part = delta.filter(col("__part") === p).drop("__part")
+            val current = ManifestTable.read(
+              spark, baseDir, s"$table.p$p", schema = Some(part.schema))
+            s"$table.p$p" ->
+              sumCountMerge(current.unionByName(part), keyCols, sumCols)
+          }.toMap
+          // The marker never changes once written: re-committing it
+          // every batch would add a data file + manifest entry per
+          // micro-batch for a constant. Write it only while the
+          // read-back finds none (first batch, or a replay of a failed
+          // first commit — sealed-txn dedup makes the true-replay case
+          // a no-op anyway).
+          val marker = spark.range(0, 1, 1, numPartitions = 1)
+            .select(lit(nParts).cast("int").as("n_parts"))
+          commit(snapshots =
+            if (recorded.isDefined) snaps else snaps + (markerT -> marker))
+        } finally delta.unpersist()
+    }
   }
 
   /** The whole rollup maintained by [[sumCountSinkPartitioned]]: the
@@ -388,32 +382,11 @@ object Rollup {
       baseDir: String,
       table: String,
       streamId: String,
-      checkpointDir: String): DataStreamWriter[org.apache.spark.sql.Row] = {
-    require(keyCols.nonEmpty, "need at least one key column")
-    require(streamId.nonEmpty && !streamId.contains("\n"),
-      s"bad streamId: $streamId")
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          if (!batch.isEmpty) {
-            val spark = batch.sparkSession
-            val delta = graft.operators.Sketches.lhBuckets(
-              batch.toDF(), col(valueCol), keyCols)
-            val current = graft.sources.ManifestTable.read(
-              spark, baseDir, table, schema = Some(delta.schema))
-            val merged = current.unionByName(delta)
-              .groupBy((keyCols :+ "idx").map(col): _*)
-              .agg(sum(col("cnt")).as("cnt"))
-            graft.sources.ManifestTable.commitMulti(
-              spark, baseDir, txnId = s"$streamId-$batchId",
-              snapshots = Map(table -> merged))
-          }
-          ()
-      }
-  }
+      checkpointDir: String): DataStreamWriter[Row] =
+    mergeSink(rows, keyCols, baseDir, table, streamId, checkpointDir)(
+      graft.operators.Sketches.lhBuckets(_, col(valueCol), keyCols),
+      _.groupBy((keyCols :+ "idx").map(col): _*)
+        .agg(sum(col("cnt")).as("cnt")))
 
   /** Streaming frequency materialized view: maintain per-key
     * count-min counters ([[graft.operators.Sketches.cmRegisters]] —
@@ -432,32 +405,12 @@ object Rollup {
       baseDir: String,
       table: String,
       streamId: String,
-      checkpointDir: String): DataStreamWriter[org.apache.spark.sql.Row] = {
-    require(keyCols.nonEmpty, "need at least one key column")
-    require(streamId.nonEmpty && !streamId.contains("\n"),
-      s"bad streamId: $streamId")
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          if (!batch.isEmpty) {
-            val spark = batch.sparkSession
-            val delta = graft.operators.Sketches.cmRegisters(
-              batch.toDF(), col(countedCol).cast("string"), keyCols)
-            val current = graft.sources.ManifestTable.read(
-              spark, baseDir, table, schema = Some(delta.schema))
-            val merged = current.unionByName(delta)
-              .groupBy((keyCols ++ Seq("j", "b")).map(col): _*)
-              .agg(sum(col("cnt")).as("cnt"))
-            graft.sources.ManifestTable.commitMulti(
-              spark, baseDir, txnId = s"$streamId-$batchId",
-              snapshots = Map(table -> merged))
-          }
-          ()
-      }
-  }
+      checkpointDir: String): DataStreamWriter[Row] =
+    mergeSink(rows, keyCols, baseDir, table, streamId, checkpointDir)(
+      graft.operators.Sketches.cmRegisters(
+        _, col(countedCol).cast("string"), keyCols),
+      _.groupBy((keyCols ++ Seq("j", "b")).map(col): _*)
+        .agg(sum(col("cnt")).as("cnt")))
 
   /** Streaming heavy-hitters materialized view: maintain a per-key
     * Misra–Gries summary (≤ k (item, wt) rows per key) and merge each
@@ -481,30 +434,11 @@ object Rollup {
       baseDir: String,
       table: String,
       streamId: String,
-      checkpointDir: String): DataStreamWriter[org.apache.spark.sql.Row] = {
-    require(keyCols.nonEmpty, "need at least one key column")
+      checkpointDir: String): DataStreamWriter[Row] = {
     require(k > 0, "k must be positive")
-    require(streamId.nonEmpty && !streamId.contains("\n"),
-      s"bad streamId: $streamId")
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          if (!batch.isEmpty) {
-            val spark = batch.sparkSession
-            val delta = batchMgSummary(batch.toDF(), keyCols, itemCol, k)
-            val current = graft.sources.ManifestTable.read(
-              spark, baseDir, table, schema = Some(delta.schema))
-            val merged = graft.operators.Sketches.mgMergeSummaries(
-              current.unionByName(delta), keyCols, k)
-            graft.sources.ManifestTable.commitMulti(
-              spark, baseDir, txnId = s"$streamId-$batchId",
-              snapshots = Map(table -> merged))
-          }
-          ()
-      }
+    mergeSink(rows, keyCols, baseDir, table, streamId, checkpointDir)(
+      batchMgSummary(_, keyCols, itemCol, k),
+      graft.operators.Sketches.mgMergeSummaries(_, keyCols, k))
   }
 
   /** One micro-batch's per-key MG summary (the sink's delta step,
@@ -534,32 +468,12 @@ object Rollup {
       baseDir: String,
       table: String,
       streamId: String,
-      checkpointDir: String): DataStreamWriter[org.apache.spark.sql.Row] = {
-    require(keyCols.nonEmpty, "need at least one key column")
-    require(streamId.nonEmpty && !streamId.contains("\n"),
-      s"bad streamId: $streamId")
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          if (!batch.isEmpty) {
-            val spark = batch.sparkSession
-            val delta = graft.operators.Sketches.bloomBits(
-              batch.toDF(), col(memberCol).cast("string"), keyCols)
-            val current = graft.sources.ManifestTable.read(
-              spark, baseDir, table, schema = Some(delta.schema))
-            val merged = current.unionByName(delta)
-              .groupBy((keyCols :+ "w").map(col): _*)
-              .agg(expr("bit_or(bits)").as("bits"))
-            graft.sources.ManifestTable.commitMulti(
-              spark, baseDir, txnId = s"$streamId-$batchId",
-              snapshots = Map(table -> merged))
-          }
-          ()
-      }
-  }
+      checkpointDir: String): DataStreamWriter[Row] =
+    mergeSink(rows, keyCols, baseDir, table, streamId, checkpointDir)(
+      graft.operators.Sketches.bloomBits(
+        _, col(memberCol).cast("string"), keyCols),
+      _.groupBy((keyCols :+ "w").map(col): _*)
+        .agg(expr("bit_or(bits)").as("bits")))
 
   /** Streaming distinct-count materialized view: maintain per-key
     * HyperLogLog REGISTERS ([[graft.operators.Sketches.hllRegisters]]
@@ -579,32 +493,12 @@ object Rollup {
       baseDir: String,
       table: String,
       streamId: String,
-      checkpointDir: String): DataStreamWriter[org.apache.spark.sql.Row] = {
-    require(keyCols.nonEmpty, "need at least one key column")
-    require(streamId.nonEmpty && !streamId.contains("\n"),
-      s"bad streamId: $streamId")
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          if (!batch.isEmpty) {
-            val spark = batch.sparkSession
-            val delta = graft.operators.Sketches.hllRegisters(
-              batch.toDF(), col(distinctCol).cast("string"), keyCols)
-            val current = graft.sources.ManifestTable.read(
-              spark, baseDir, table, schema = Some(delta.schema))
-            val merged = current.unionByName(delta)
-              .groupBy((keyCols :+ "j").map(col): _*)
-              .agg(max(col("mj")).as("mj"))
-            graft.sources.ManifestTable.commitMulti(
-              spark, baseDir, txnId = s"$streamId-$batchId",
-              snapshots = Map(table -> merged))
-          }
-          ()
-      }
-  }
+      checkpointDir: String): DataStreamWriter[Row] =
+    mergeSink(rows, keyCols, baseDir, table, streamId, checkpointDir)(
+      graft.operators.Sketches.hllRegisters(
+        _, col(distinctCol).cast("string"), keyCols),
+      _.groupBy((keyCols :+ "j").map(col): _*)
+        .agg(max(col("mj")).as("mj")))
 
   /** Streaming KMV materialized view: maintain each key's k SMALLEST
     * distinct hashes ([[graft.operators.Sketches.kmvSketch]] — the
@@ -627,33 +521,13 @@ object Rollup {
       baseDir: String,
       table: String,
       streamId: String,
-      checkpointDir: String): DataStreamWriter[org.apache.spark.sql.Row] = {
-    require(keyCols.nonEmpty, "need at least one key column")
-    require(streamId.nonEmpty && !streamId.contains("\n"),
-      s"bad streamId: $streamId")
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          if (!batch.isEmpty) {
-            val spark = batch.sparkSession
-            val delta = graft.operators.Sketches.kmvSketch(
-              batch.toDF(), col(distinctCol).cast("string"), keyCols, k)
-              .drop("rank")
-            val current = graft.sources.ManifestTable.read(
-              spark, baseDir, table, schema = Some(delta.schema))
-            val merged = graft.operators.Ranking.groupTopK(
-              current.unionByName(delta)
-                .dropDuplicates(keyCols :+ "h"),
-              keyCols, Seq(col("h").as("h")), k)
-              .drop("rank")
-            graft.sources.ManifestTable.commitMulti(
-              spark, baseDir, txnId = s"$streamId-$batchId",
-              snapshots = Map(table -> merged))
-          }
-          ()
-      }
+      checkpointDir: String): DataStreamWriter[Row] = {
+    graft.operators.Sketches.requireKmvK(k)
+    mergeSink(rows, keyCols, baseDir, table, streamId, checkpointDir)(
+      graft.operators.Sketches.kmvSketch(
+        _, col(distinctCol).cast("string"), keyCols, k).drop("rank"),
+      u => graft.operators.Ranking.groupTopK(
+        u.dropDuplicates(keyCols :+ "h"),
+        keyCols, Seq(col("h").as("h")), k).drop("rank"))
   }
 }

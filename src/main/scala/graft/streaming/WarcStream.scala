@@ -17,10 +17,10 @@ import org.apache.spark.sql.functions._
   * event-time column through the parse boundary (for downstream
   * watermarking) and landing exactly-once, and both reuse the
   * existing seams: [[CorpusStream.cleanStream]] for gate + dedup
-  * state, [[CorpusStream.appendSink]] / [[CorpusStream.manifestSink]]
-  * for the sink. At 100 TB the fetcher's shard rows are the natural
-  * unit of parallelism — each task walks its own shards, nothing
-  * shuffles until the dedup state lookup. */
+  * state, [[CorpusStream.manifestSink]] for the sink. At 100 TB the
+  * fetcher's shard rows are the natural unit of parallelism — each
+  * task walks its own shards, nothing shuffles until the dedup state
+  * lookup. */
 object WarcStream {
 
   /** Shard rows → one row per WARC record, event time carried.
@@ -73,7 +73,6 @@ object WarcStream {
 
   /** The full ingest transform: parse → 200-docs → rule filter +
     * content dedup within the lateness horizon. Wire the result to
-    * [[CorpusStream.appendSink]] (parquet + checkpoint) or
     * [[CorpusStream.manifestSink]] (per-batch txn ids) to land it.
     * Output: (doc_id, tsCol, text). */
   def warcIngest(

@@ -97,6 +97,35 @@ class OperatorCensusSpec extends AnyFunSuite {
         stray.map(_._1).mkString(", ") + s" (all sites: ${sites.map(_._1)})")
   }
 
+  test("streams land in manifest tables only through ManifestSink") {
+    // Fifteen hand-wired foreachBatch sinks once restated the
+    // exactly-once rule (commit under txn id <streamId>-<batchId>);
+    // every manifest landing now goes through streaming.ManifestSink.
+    val wiring = """\.foreachBatch\b|-\$batchId""".r
+    val sites = mainSources.filter(_._1.getName != "ManifestSink.scala")
+      .flatMap { case (f, lines) =>
+        lines.zipWithIndex.collect {
+          case (l, i) if wiring.findFirstIn(l).isDefined =>
+            s"${f.getName}:${i + 1}"
+        }
+      }
+    assert(sites.isEmpty,
+      s"hand-wired stream sink(s) — call ManifestSink: " +
+        sites.mkString(", "))
+  }
+
+  test("no main source holds a raw NUL byte") {
+    // grep and ripgrep treat a file with a NUL byte as binary and hide
+    // its matching lines; string literals spell it as the escape.
+    val sites = mainSources.flatMap { case (f, lines) =>
+      lines.zipWithIndex.collect {
+        case (l, i) if l.contains('\u0000') => s"${f.getName}:${i + 1}"
+      }
+    }
+    assert(sites.isEmpty,
+      s"raw NUL byte(s) — write the escape instead: ${sites.mkString(", ")}")
+  }
+
   test("no same-file redefinition outside the overload allowlist") {
     val files = opsDir.listFiles.filter(_.getName.endsWith(".scala"))
     val dups = files.flatMap { f =>

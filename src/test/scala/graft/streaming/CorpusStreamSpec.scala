@@ -61,35 +61,6 @@ class CorpusStreamSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("appendSink lands the cleaned stream exactly once across restarts") {
-    import spark.implicits._
-    val out = java.nio.file.Files.createTempDirectory("cs-out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("cs-ckpt").toString
-    val input = MemoryStream[(Long, Timestamp, String)](spark)
-    def start() = CorpusStream.appendSink(
-      CorpusStream.dedupByContent(
-        input.toDF().toDF("doc_id", "ts", "text"), "ts", "text"),
-      out, ckpt).start()
-    val q1 = start()
-    try {
-      input.addData((1L, ts("2024-01-01 10:00:00"), "alpha beta gamma"))
-      q1.processAllAvailable()
-    } finally q1.stop()
-    // Restart from the checkpoint: the old batch must not re-land, the
-    // new one must, and a duplicate of a pre-restart doc still drops
-    // (fingerprint state recovers from the checkpoint).
-    val q2 = start()
-    try {
-      input.addData(
-        (2L, ts("2024-01-01 10:05:00"), "gamma beta alpha"),  // dup of 1
-        (3L, ts("2024-01-01 10:06:00"), "delta epsilon zeta"))
-      q2.processAllAvailable()
-    } finally q2.stop()
-    val landed = spark.read.parquet(out).select("doc_id")
-      .as[Long].collect().sorted.toSeq
-    assert(landed == Seq(1L, 3L))
-  }
-
   test("manifestSink: per-batch txn commits are exactly-once across restart and replay") {
     import graft.sources.ManifestTable
     import spark.implicits._
