@@ -328,14 +328,18 @@ object Profile {
       (col("tn") + col("fn"))).cast(dec)
     val q4 = TimeSeries.divFloorDec(
       (lit(4000000000000L).cast(dec) * num * num).cast(dec), dd)
-    g.select(col("__g").as(groupCol), col("n"), col("tp"), col("fp"),
+    // q4 is its own column: zMicroFromQ reads its argument about nine
+    // times, and inlined into the aggregate's output code the copies
+    // outgrow the 64 KB method limit of whole-stage codegen.
+    g.withColumn("__q4", when(dd > 0, q4))
+      .select(col("__g").as(groupCol), col("n"), col("tp"), col("fp"),
       col("fn"), col("tn"),
       // Same overflow-vs-degeneracy honesty as [[cuzickTrend]]:
       // under the sessions' ANSI default, decimal(38,0) overflow of
       // 4e12·num² (n ≳ 2e6 per group) FAILS with
       // NUMERIC_VALUE_OUT_OF_RANGE rather than impersonating the
       // degenerate-marginal NULL (ProfileSpec locks the throw).
-      when(dd > 0, TimeSeries.zMicroFromQ(q4, num < 0))
+      when(dd > 0, TimeSeries.zMicroFromQ(col("__q4"), num < 0))
         .otherwise(lit(null).cast("long")).as("mcc_micro"))
   }
 
@@ -5589,12 +5593,14 @@ object Profile {
       TimeSeries.divFloorDec(
         (lit(5000000000000L).cast(dec) * rQ).cast(dec), den))
       .cast(dec)
-    stats.select(col("__g").as(groupCol), col("n_a"), col("n_b"),
+    val defined = col("n_a") > 0L && col("n_b") > 0L &&
+      col("n_a") + col("n_b") >= 3L
+    // q is its own column, as in [[matthewsCorr]].
+    stats.withColumn("__q", when(defined, q))
+      .select(col("__g").as(groupCol), col("n_a"), col("n_b"),
       t4.cast("long").as("t4"),
-      when(col("n_a") > 0L && col("n_b") > 0L &&
-          col("n_a") + col("n_b") >= 3L,
-        TimeSeries.zMicroFromQ(q, d < 0)).otherwise(lit(null)
-        .cast("long")).as("z_micro"))
+      when(defined, TimeSeries.zMicroFromQ(col("__q"), d < 0))
+        .otherwise(lit(null).cast("long")).as("z_micro"))
   }
 
   /** Dixon's Q per group — the SMALL-SAMPLE outlier ratio

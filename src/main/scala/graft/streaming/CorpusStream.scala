@@ -113,9 +113,17 @@ object CorpusStream {
             threshold = threshold)
           .filter(col("keep"))
           .select(idCol)
-        val survivors = batch.join(keep, Seq(idCol), "left_semi")
-        if (!survivors.isEmpty) commit(appends = Map(table -> survivors))
+        commitSurvivors(batch.join(keep, Seq(idCol), "left_semi"), table, commit)
     }
+
+  /** Append a gate's survivors, if any. Pinned, so the emptiness check
+    * and the write evaluate the gate plan once. */
+  private def commitSurvivors(
+      survivors: DataFrame, table: String, commit: ManifestSink.Commit): Unit = {
+    survivors.persist()
+    try if (!survivors.isEmpty) commit(appends = Map(table -> survivors))
+    finally survivors.unpersist()
+  }
 
   /** [[lmGatedSink]] with the bar set by the DATA instead of a frozen
     * constant: the stream maintains a mergeable log-linear histogram
@@ -243,8 +251,7 @@ object CorpusStream {
         val keep = Corpus.lmScore(batch, model, idCol, textCol)
           .filter(col("nll") <= maxNll)
           .select(idCol)
-        val survivors = batch.join(keep, Seq(idCol), "left_semi")
-        if (!survivors.isEmpty) commit(appends = Map(table -> survivors))
+        commitSurvivors(batch.join(keep, Seq(idCol), "left_semi"), table, commit)
     }
   }
 

@@ -76,6 +76,11 @@ object GraftSqlBridge {
     scala.concurrent.Await.result(
       sc.cancelJobsWithTagWithFuture(tag, reason),
       scala.concurrent.duration.Duration(60, "s"))
-    sc.listenerBus.waitUntilEmpty()
+    drainListeners(sc)
   }
+
+  /** Return once the listener bus has delivered every event posted so
+    * far. */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

@@ -114,6 +114,35 @@ class OperatorCensusSpec extends AnyFunSuite {
         sites.mkString(", "))
   }
 
+  /** "path:line" of every match of `pat` in a main source whose path
+    * under src/main/scala/graft is not in `allowed`. */
+  private def strays(pat: scala.util.matching.Regex, allowed: Set[String]): Seq[String] =
+    mainSources.flatMap { case (f, lines) =>
+      val path = f.getPath.replace('\\', '/').stripPrefix("src/main/scala/graft/")
+      val text = lines.mkString("\n")
+      if (allowed(path)) Nil
+      else pat.findAllMatchIn(text).map(m =>
+        s"$path:${text.take(m.start).count(_ == '\n') + 1}").toSeq
+    }
+
+  test("mains live only in the graded harness and the allowed tools") {
+    // Four copy-pasted timing and plan mains once drifted from Bench's
+    // session (core count, time zone, cleanup); gates are timed and
+    // their plans dumped by tools.Profile.
+    val sites = strays("""\bdef main\(""".r, Set("Bench.scala", "Verify.scala",
+      "Smoke.scala", "PlanAudit.scala", "ScaleBench.scala",
+      "streaming/Monitor.scala", "tools/Profile.scala"))
+    assert(sites.isEmpty, s"main(s) outside the allowed entry points: ${sites.mkString(", ")}")
+  }
+
+  test("sessions are built only by Graft.session and the mains that mirror Bench") {
+    val sites = strays("""SparkSession\s*\.builder\(""".r, Set("Graft.scala",
+      "Bench.scala", "Verify.scala", "tools/Profile.scala"))
+    assert(sites.isEmpty,
+      s"SparkSession.builder() outside Graft, Bench, Verify and tools.Profile: " +
+        sites.mkString(", "))
+  }
+
   test("no main source holds a raw NUL byte") {
     // grep and ripgrep treat a file with a NUL byte as binary and hide
     // its matching lines; string literals spell it as the escape.
