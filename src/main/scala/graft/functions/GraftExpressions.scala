@@ -17,60 +17,6 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object GraftExpressions {
 
-  /** `minhashSig(hs)`: given the array of per-shingle base hashes,
-    * compute the K-long signature `min_k((a_k*h + b_k) mod p)` in one
-    * pass. Inputs must already be in [0, p). */
-  case class MinHashSig(child: Expression, as: Array[Long], bs: Array[Long], p: Long)
-      extends UnaryExpression {
-
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def prettyName: String = "minhash_sig"
-
-    override def nullSafeEval(input: Any): Any = {
-      val arr = input.asInstanceOf[ArrayData]
-      val out = MinHashSig.compute(arr, as, bs, p)
-      new GenericArrayData(out)
-    }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val asRef = ctx.addReferenceObj("mhAs", as, "long[]")
-      val bsRef = ctx.addReferenceObj("mhBs", bs, "long[]")
-      val out = ctx.freshName("mhOut")
-      nullSafeCodeGen(ctx, ev, c => {
-        s"""
-           |long[] $out = graft.functions.GraftExpressions.MinHashSig$$.MODULE$$
-           |  .compute($c, $asRef, $bsRef, ${p}L);
-           |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-         """.stripMargin
-      })
-    }
-
-    override protected def withNewChildInternal(newChild: Expression): MinHashSig =
-      copy(child = newChild)
-  }
-
-  object MinHashSig {
-    /** Shared by eval and codegen: tight primitive loop, no boxing. */
-    def compute(arr: ArrayData, as: Array[Long], bs: Array[Long], p: Long): Array[Long] = {
-      val k = as.length
-      val out = new Array[Long](k)
-      java.util.Arrays.fill(out, p)
-      val n = arr.numElements()
-      var i = 0
-      while (i < n) {
-        val h = arr.getLong(i)
-        var j = 0
-        while (j < k) {
-          val v = (as(j) * h + bs(j)) % p
-          if (v < out(j)) out(j) = v
-          j += 1
-        }
-        i += 1
-      }
-      out
-    }
-  }
-
   /** `langId(tokens)`: argmax language by stopword-marker hits with
     * (hits desc, lang asc) tie-break; zero hits ⇒ "und". Token→lang
     * lookups go through a prebuilt hash map (a token may mark several
@@ -146,8 +92,8 @@ object GraftExpressions {
   /** `minhashTokens(toks)`: word-shingles of `shingleSize` → 48-bit
     * md5 prefix mod p per shingle → K-way affine min signature, all in
     * one native pass. Semantics identical to
-    * `hash48(concat_ws(" ", slice(toks, i, n))) % p` + [[MinHashSig]]
-    * (duplicate shingles cannot change a min, so no distinct pass is
+    * `hash48(concat_ws(" ", slice(toks, i, n))) % p` followed by the
+    * affine mins `min_k((a_k*h + b_k) mod p)` (duplicate shingles cannot change a min, so no distinct pass is
     * needed). Fewer than `shingleSize` tokens ⇒ empty array. */
   case class MinHashFromTokens(
       child: Expression, shingleSize: Int, as: Array[Long], bs: Array[Long], p: Long)
@@ -819,9 +765,6 @@ object GraftExpressions {
     GraftSqlBridge.column(
       IntersectSizeSorted(GraftSqlBridge.expression(a),
         GraftSqlBridge.expression(b)))
-
-  def minhashSig(hs: Column, as: Array[Long], bs: Array[Long], p: Long): Column =
-    GraftSqlBridge.column(MinHashSig(GraftSqlBridge.expression(hs), as, bs, p))
 
   def minhashFromTokens(
       toks: Column, shingleSize: Int,

@@ -357,63 +357,4 @@ object SeriesKernels {
   def hodgesLehmannStats(va: Column, vb: Column): Column =
     GraftSqlBridge.column(HodgesLehmannStats(
       GraftSqlBridge.expression(va), GraftSqlBridge.expression(vb)))
-
-  /** `selfPairsOrdered(ids)`: all (ids(i), ids(j)) with i < j, for an
-    * array of ANY atomic element type — the type-generic sibling of
-    * [[GraftExpressions.SelfPairs]] (which is long-only). The caller
-    * supplies the array pre-sorted ascending so positional pairs are
-    * value pairs a < b. Used by the wedge-census link predictors,
-    * where per-bucket size is already capped (maxDegree), so the
-    * same 10M-pair hot-bucket guard applies. */
-  case class SelfPairsOrdered(child: Expression) extends UnaryExpression {
-    private def elemType: DataType =
-      child.dataType.asInstanceOf[org.apache.spark.sql.types.ArrayType]
-        .elementType
-    override def dataType: DataType = org.apache.spark.sql.types.ArrayType(
-      StructType(Seq(
-        StructField("a", elemType, nullable = true),
-        StructField("b", elemType, nullable = true))),
-      containsNull = false)
-    override def prettyName: String = "self_pairs_ordered"
-
-    def compute(input: Any): Any = {
-      val ids = input.asInstanceOf[ArrayData]
-      val et = elemType
-      val n = ids.numElements()
-      val nPairs = n.toLong * (n - 1) / 2
-      require(nPairs <= MaxPairs,
-        s"self_pairs_ordered: bucket of $n ids would expand to " +
-          s"$nPairs pairs; cap the bucket upstream")
-      val out = new Array[Any](nPairs.toInt)
-      var w = 0
-      var i = 0
-      while (i < n) {
-        val a = ids.get(i, et)
-        var j = i + 1
-        while (j < n) {
-          out(w) = InternalRow(a, ids.get(j, et))
-          w += 1
-          j += 1
-        }
-        i += 1
-      }
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-    }
-
-    override def nullSafeEval(input: Any): Any = compute(input)
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("spoExpr", this,
-        "graft.functions.SeriesKernels.SelfPairsOrdered")
-      nullSafeCodeGen(ctx, ev, c =>
-        s"""${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData)
-           |  $ref.compute($c);""".stripMargin)
-    }
-
-    override protected def withNewChildInternal(
-        newChild: Expression): SelfPairsOrdered = copy(child = newChild)
-  }
-
-  def selfPairsOrdered(ids: Column): Column =
-    GraftSqlBridge.column(SelfPairsOrdered(GraftSqlBridge.expression(ids)))
 }

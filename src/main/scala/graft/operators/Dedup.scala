@@ -446,9 +446,7 @@ object Dedup {
       val idType = sym.schema("x").dataType
       val rows = parent.keySet().toArray.toSeq
         .map(k => org.apache.spark.sql.Row(k, find(k)))
-      return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows,
-          math.max(1, math.min(rows.size / 50000, 32))),
+      return DriverFold.frame(spark, rows,
         org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("id", idType),
           org.apache.spark.sql.types.StructField("component", idType))))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, count, lit, when}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -75,6 +75,12 @@ private[graft] object DriverFold {
     case StringType => true // equals only the UTF8_BINARY collation
     case _ => false
   }
+
+  /** A fold's result rows back in Spark as a frame under `schema`:
+    * one partition per 50,000 rows, at least 1 and at most 32. */
+  def frame(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(rows,
+      math.max(1, math.min(rows.size / 50000, 32))), schema)
 
   /** The collected inputs when the fold may run, else None (the caller
     * runs its distributed loop). Runs no Spark job when `cap <= 0` or

@@ -369,9 +369,7 @@ object Graph {
       val idType = e.schema("__src").dataType
       val rows = nodesL.toSeq.map(n =>
         org.apache.spark.sql.Row(n, rankM.get(n).longValue))
-      return (spark.createDataFrame(
-        spark.sparkContext.parallelize(rows,
-          math.max(1, math.min(rows.size / 50000, 32))),
+      return (DriverFold.frame(spark, rows,
         org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("node", idType),
           org.apache.spark.sql.types.StructField("rank",
@@ -585,9 +583,7 @@ object Graph {
         rows += org.apache.spark.sql.Row(en.getKey,
           en.getValue.longValue)
       }
-      return (spark.createDataFrame(
-        spark.sparkContext.parallelize(rows.toSeq,
-          math.max(1, math.min(rows.size / 50000, 32))),
+      return (DriverFold.frame(spark, rows.toSeq,
         org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("node", idType),
           org.apache.spark.sql.types.StructField("core_deg",
@@ -687,9 +683,7 @@ object Graph {
       val idType = e.schema("x").dataType
       val rows = nodesL.toSeq.map(n =>
         org.apache.spark.sql.Row(n, labM.get(n)))
-      return (spark.createDataFrame(
-        spark.sparkContext.parallelize(rows,
-          math.max(1, math.min(rows.size / 50000, 32))),
+      return (DriverFold.frame(spark, rows,
         org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("node", idType),
           org.apache.spark.sql.types.StructField("label", idType)))),
@@ -809,9 +803,7 @@ object Graph {
       val idType = e.schema("__src").dataType
       val rows = nodesL.toSeq.map(n =>
         org.apache.spark.sql.Row(n, rankM.get(n).longValue))
-      return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows,
-          math.max(1, math.min(rows.size / 50000, 32))),
+      return DriverFold.frame(spark, rows,
         org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("node", idType),
           org.apache.spark.sql.types.StructField("rank",
@@ -918,9 +910,7 @@ object Graph {
       val rows = nodesL.toSeq.map(n =>
         org.apache.spark.sql.Row(n, hubM.get(n).longValue,
           authM.get(n).longValue))
-      return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows,
-          math.max(1, math.min(rows.size / 50000, 32))),
+      return DriverFold.frame(spark, rows,
         org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("node", idType),
           org.apache.spark.sql.types.StructField("hub",
@@ -1063,9 +1053,7 @@ object Graph {
       val labType = sd.schema("__seed_label").dataType
       val rows = nodesL.toSeq.map(n =>
         org.apache.spark.sql.Row(n, labM.get(n), isSeed.contains(n)))
-      return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows,
-          math.max(1, math.min(rows.size / 50000, 32))),
+      return DriverFold.frame(spark, rows,
         org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("node", idType),
           org.apache.spark.sql.types.StructField("label", labType),
@@ -1213,9 +1201,7 @@ object Graph {
         rows += org.apache.spark.sql.Row(en.getKey,
           en.getValue.intValue)
       }
-      return (spark.createDataFrame(
-        spark.sparkContext.parallelize(rows.toSeq,
-          math.max(1, math.min(rows.size / 50000, 32))),
+      return (DriverFold.frame(spark, rows.toSeq,
         org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("node", idType),
           org.apache.spark.sql.types.StructField("dist",

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Multimodal (image/audio/video) columns for a training-data
   * pipeline: opaque `binary` content + typed metadata, with
@@ -26,21 +25,6 @@ import org.apache.spark.sql.types._
   * than row count.
   */
 object Multimodal {
-
-  /** Typed metadata carried alongside the opaque content bytes. */
-  val mediaMetaSchema: StructType = StructType(Seq(
-    StructField("format", StringType),
-    StructField("width", IntegerType),
-    StructField("height", IntegerType),
-    StructField("sampleRateHz", IntegerType),
-    StructField("durationMs", LongType),
-    StructField("sizeBytes", LongType, nullable = false)))
-
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("kind", StringType, nullable = false), // image | audio | video
-    StructField("content", BinaryType, nullable = false),
-    StructField("meta", mediaMetaSchema, nullable = false)))
 
   /** STUB CODEC — deterministic fake standing in for image/audio
     * decoding. A real deployment replaces exactly these functions with

@@ -10,7 +10,6 @@ import org.apache.spark.sql.functions._
   *
   * Reference behavior studied at:
   *  - enum → string normalization: `src/roborock_collector.py:308-325,491-503`
-  *  - null defaulting (`x or 0`):  `src/roborock_collector.py:328-329,379-381`
   *  - unit conversions:            `src/roborock_collector.py:332,480-481`
   *  - state predicates:            `src/roborock_collector.py:534-547`,
   *    `config/settings.py:37-38`
@@ -45,10 +44,6 @@ object Normalize {
       .otherwise(coalesce(mapped, lit(default)))
   }
 
-  /** P3 — null defaulting (`getattr(..., 0) or 0`). */
-  def nullDefault(c: Column, default: Double = 0.0): Column =
-    coalesce(c, lit(default))
-
   /** C1 — cm² → m²: `round(x / 10000, 2)`. HALF_UP `round` matches the
     * DuckDB oracle's `round` (verified: both round the shortest decimal
     * repr of the double half-away-from-zero). */
@@ -56,12 +51,4 @@ object Normalize {
 
   /** C2 — seconds → minutes: `round(x / 60, 1)`. */
   def secToMin(c: Column): Column = round(c / 60, 1)
-
-  /** C6 — monotonic-counter delta clamp: `max(0, cur - last)`
-    * (state_manager.py:71-74). */
-  def deltaClamp(cur: Column, last: Column): Column =
-    greatest(lit(0), cur - last)
-
-  /** C7 — battery drain over a session. */
-  def batteryDrain(start: Column, end: Column): Column = start - end
 }

@@ -1,18 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** The reference's batch entry points as composable, set-oriented
-  * transforms (SURVEY.md §3): smart-sync (pipeline.py:472-572) and the
-  * Daily_Summary aggregate the reference declares but never computes
-  * (pipeline.py:307, README.md:250-257).
-  *
-  * Scale: smart-sync joins a per-device snapshot (one row per device)
-  * against a state table of the same shape — the state side is always
-  * broadcast; appends are idempotent via left-anti dedup, replacing
-  * the reference's advance-state-even-on-sink-failure bug
-  * (pipeline.py:562-568) with atomic batch semantics.
+/** The reference's batch analytics as set-oriented transforms
+  * (SURVEY.md §3): the Daily_Summary aggregate the reference declares
+  * but never computes (pipeline.py:307, README.md:250-257), its
+  * period rollup, and the record-log consistency check. The smart-sync
+  * entry point (pipeline.py:472-572) is [[SmartSync]].
   */
 object Pipeline {
 
@@ -47,28 +42,6 @@ object Pipeline {
       .agg(count(lit(1)).as("cleanings"),
         sum(coalesce(col(areaCol), lit(0.0))).as("areaM2"))
 
-  /** T4 smart-sync core — which devices have new work?
-    * current: one row per device with `totalCleanCount`; state: last
-    * synced count per device. Returns devices to sync with their
-    * clamped delta (state_manager.py:66-74 + pipeline.py:505-513).
-    */
-  def devicesWithNewWork(
-      current: DataFrame,
-      state: DataFrame,
-      keyCol: String = "deviceName",
-      countCol: String = "totalCleanCount",
-      lastCountCol: String = "lastCleanCount"): DataFrame =
-    Incremental.stateDelta(current, state, keyCol, countCol, lastCountCol)
-      .filter(col("new_n") > 0)
-
-  /** T4 post-sync state snapshot: the new per-device watermark table
-    * (overwrite semantics — one row per device). */
-  def nextState(
-      current: DataFrame,
-      keyCol: String = "deviceName",
-      countCol: String = "totalCleanCount"): DataFrame =
-    current.select(col(keyCol), col(countCol).as("lastCleanCount"))
-
   /** A2 — recompute lifetime totals from the record log and compare
     * with the device-reported snapshot: the consistency check the
     * reference cannot do (SURVEY.md §2.4). Returns rows where they
@@ -82,15 +55,4 @@ object Pipeline {
     summary.join(recomputed, Seq(keyCol), "left")
       .filter(coalesce(col("recount"), lit(0L)) =!= coalesce(col("totalCleanCount"), lit(0L)))
   }
-
-  /** Latest consumables state as-of each cleaning (J2's as-of join
-    * over the shared device key, SURVEY.md §2.6). */
-  def consumablesAsOfCleaning(
-      cleanings: DataFrame,
-      consumables: DataFrame,
-      keyCol: String = "deviceName",
-      tsCol: String = "timestamp",
-      tieBreak: String = "timestamp"): DataFrame =
-    Incremental.asOfJoin(cleanings, consumables, keyCol, tsCol, tieBreak,
-      "lastConsumablesTs")
 }

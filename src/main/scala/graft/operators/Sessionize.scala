@@ -494,8 +494,7 @@ object Sessionize {
       // no (full) pconv row ⇒ empty output, channel rows require
       // their own pconv row (S reachable in that variant's states).
       val effL = pconvLToEff(pconvL, chansL)
-      return spark.createDataFrame(
-        spark.sparkContext.parallelize(effL, 1), schema)
+      return DriverFold.frame(spark, effL, schema)
     }
     val chans = trans0.select(col("from_state").as("__v"))
       .filter(col("__v") =!= S).distinct()

@@ -51,7 +51,10 @@ object SmartSync {
         org.apache.spark.sql.types.LongType)))
     val state = ManifestTable.read(spark, baseDir, StateTable, Some(stateSchema))
 
-    val newWork = Pipeline.devicesWithNewWork(summaries, state).cache()
+    // Devices whose counter advanced, with their clamped delta
+    // (state_manager.py:66-74 + pipeline.py:505-513).
+    val newWork = Incremental.stateDelta(summaries, state, "deviceName",
+      "totalCleanCount", "lastCleanCount").filter(col("new_n") > 0).cache()
     val devices = newWork.select(col("deviceName"))
     def forNewDevices(df: DataFrame): DataFrame =
       df.join(broadcast(devices), Seq("deviceName"), "left_semi")
@@ -66,7 +69,9 @@ object SmartSync {
         ManifestTable.commitMulti(spark, baseDir, syncId)
         Result(0L, 0L, 0L, 0L)
       } else {
-        val cur = Pipeline.nextState(summaries)
+        // The new per-device watermark: one row per device.
+        val cur = summaries.select(col("deviceName"),
+          col("totalCleanCount").as("lastCleanCount"))
         val carried = state.join(cur, Seq("deviceName"), "left_anti")
         val counts = ManifestTable.commitMulti(spark, baseDir, syncId,
           appends = Map(

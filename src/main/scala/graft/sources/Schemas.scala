@@ -1,11 +1,10 @@
 package graft.sources
 
 import java.sql.Timestamp
-import org.apache.spark.sql.types._
 
 /** The six output tables of the reference pipeline (SURVEY.md §1.4;
   * header constants at src/roborock_collector.py:579-635 and
-  * pipeline.py:307), as Spark schemas + case classes.
+  * pipeline.py:307), as case classes.
   *
   * Deviations, both intentional:
   *  - timestamps are TimestampType, not ISO strings (the reference
@@ -59,25 +58,4 @@ object Schemas {
       deviceName: String, ts: Timestamp, state: String, battery: Option[Int],
       fanPower: Option[String], waterLevel: Option[String], mopMode: Option[String],
       errorCode: Option[Int])
-
-  val cleaningHistorySchema: StructType = StructType(Seq(
-    StructField("timestamp", TimestampType, nullable = false),
-    StructField("deviceName", StringType, nullable = false),
-    StructField("cleanTimeMin", DoubleType),
-    StructField("cleanAreaM2", DoubleType),
-    StructField("batteryStart", IntegerType),
-    StructField("batteryEnd", IntegerType),
-    StructField("fanPower", StringType),
-    StructField("waterLevel", StringType),
-    StructField("mopMode", StringType),
-    StructField("state", StringType),
-    StructField("errorCode", IntegerType)))
-
-  val dailySummarySchema: StructType = StructType(Seq(
-    StructField("date", DateType, nullable = false),
-    StructField("totalCleanings", LongType, nullable = false),
-    StructField("totalAreaM2", DoubleType, nullable = false),
-    StructField("totalTimeMin", DoubleType, nullable = false),
-    StructField("avgAreaM2", DoubleType, nullable = false),
-    StructField("avgTimeMin", DoubleType, nullable = false)))
 }

@@ -20,16 +20,24 @@ private[graft] object ManifestSink {
   /** The batch's commit, bound to its txn id: one
     * [[graft.sources.ManifestTable.commitMulti]] manifest. With no
     * tables it only seals the txn, so a replay of the batch is a
-    * no-op. */
+    * no-op.
+    *
+    * A replay whose txn is already sealed writes nothing, so nothing
+    * runs the batch. A stateful input (the sessionizer, a streaming
+    * dedup) commits its state stores only from partitions that run,
+    * and Spark fails the batch unless all of them did; so a sealed
+    * commit of tables counts the batch through instead. */
   final class Commit private[ManifestSink] (
-      spark: org.apache.spark.sql.SparkSession,
+      batch: DataFrame,
       baseDir: String,
       txnId: String) {
     def apply(
         appends: Map[String, DataFrame] = Map.empty,
-        snapshots: Map[String, DataFrame] = Map.empty): Unit =
-      ManifestTable.commitMulti(spark, baseDir, txnId,
+        snapshots: Map[String, DataFrame] = Map.empty): Unit = {
+      val counts = ManifestTable.commitMulti(batch.sparkSession, baseDir, txnId,
         appends = appends, snapshots = snapshots)
+      if (counts.isEmpty && (appends.nonEmpty || snapshots.nonEmpty)) batch.count()
+    }
   }
 
   /** Wire `input` to land in `baseDir`: `body` gets each non-empty
@@ -49,8 +57,7 @@ private[graft] object ManifestSink {
       .outputMode("append")
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         if (!batch.isEmpty)
-          body(batch, batchId,
-            new Commit(batch.sparkSession, baseDir, s"$streamId-$batchId"))
+          body(batch, batchId, new Commit(batch, baseDir, s"$streamId-$batchId"))
         ()
       }
   }

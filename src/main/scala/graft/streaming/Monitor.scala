@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.sources.ManifestTable
 import graft.sources.Schemas.StatusSample
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -13,27 +14,30 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * restart from the checkpoint.
   *
   * In production the source is the telemetry landing zone (files/
-  * Kafka); [[demoQuery]] wires the same pipeline to a rate source with
+  * Kafka); [[demoSamples]] wires the same pipeline to a rate source with
   * synthetic state transitions so the whole job runs anywhere.
   */
 object Monitor {
 
-  /** Wire any StatusSample stream through the sessionizer to an
-    * append parquet sink with exactly-once checkpointing. */
+  /** The manifest table the sessions land in. */
+  val Table = "Cleaning_History"
+
+  /** Wire any StatusSample stream through the sessionizer into the
+    * [[Table]] table of the manifest log under `baseDir`, through
+    * [[ManifestSink]]: each micro-batch that emits sessions commits
+    * them under txn id `<streamId>-<batchId>`, so a batch replayed
+    * after a restart lands nothing twice. */
   def start(
       samples: org.apache.spark.sql.Dataset[StatusSample],
-      outDir: String,
+      baseDir: String,
+      streamId: String,
       checkpointDir: String,
       pollInterval: String = "60 seconds")(
       implicit spark: SparkSession): StreamingQuery =
-    Sessionizer.sessions(samples)
-      .writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(Trigger.ProcessingTime(pollInterval))
-      .start()
+    ManifestSink(Sessionizer.sessions(samples).toDF(), baseDir, streamId,
+        checkpointDir) {
+      (batch, _, commit) => commit(appends = Map(Table -> batch))
+    }.trigger(Trigger.ProcessingTime(pollInterval)).start()
 
   /** Demo source: rate stream → deterministic per-device state cycle
     * (charging → cleaning ×3 → charging …) so session edges occur
@@ -61,13 +65,12 @@ object Monitor {
     implicit val spark: SparkSession = graft.Graft.session("graft-monitor")
     import spark.implicits._
     val base = java.nio.file.Files.createTempDirectory("monitor")
-    val out = base.resolve("sessions").toString
-    val q = start(
-      demoSamples(spark).as[StatusSample],
-      out, base.resolve("ckpt").toString, pollInterval = "2 seconds")
+    val tables = base.resolve("tables").toString
+    val q = start(demoSamples(spark).as[StatusSample], tables, "monitor",
+      base.resolve("ckpt").toString, pollInterval = "2 seconds")
     q.awaitTermination(20000)
     q.stop()
-    val sessions = spark.read.parquet(out)
+    val sessions = ManifestTable.read(spark, tables, Table)
     sessions.show(20, truncate = false)
     println(s"SESSIONS=${sessions.count()}")
     spark.stop()

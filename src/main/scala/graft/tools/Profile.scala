@@ -20,9 +20,12 @@ import graft.{Graft, SparkEntry}
   * (no prefix: every gate; `SPARK_GRAFT_SF_DIR` and `SPARK_GRAFT_CPUS`
   * as for Bench). `--fresh` rebuilds and re-warms the session before
   * every run, so a gate is timed without the state earlier gates leave
-  * in one session. Writes one JSON object to `<out.json>` and, after the
-  * timed reps, each gate's formatted plan to `<out>_plans/<gate>.txt`
-  * (`<out>` without its `.json`). */
+  * in one session. Bench's warm-up reads `lineitem`; a data dir without
+  * that table is warmed by the data-free step only, and the JSON's
+  * `warmup` ("lineitem" or "range") says which ran. Writes one JSON
+  * object to `<out.json>` and, after the timed reps, each gate's
+  * formatted plan to `<out>_plans/<gate>.txt` (`<out>` without its
+  * `.json`). */
 object Profile {
 
   /** One gate's runs: seconds per rep (-1.0 for a failed run) and the
@@ -67,10 +70,14 @@ object Profile {
     val unmatched = prefixes.filterNot(p => all.exists(_.startsWith(p)))
     require(unmatched.isEmpty, s"no gate matches ${unmatched.mkString(", ")}")
     val names = all.filter(n => prefixes.isEmpty || prefixes.exists(n.startsWith))
+    // Bench's warm-up; a data dir without lineitem (perfbench's sf0.1
+    // tables) gets only its first, data-free step.
+    val warmup =
+      if (Files.exists(Paths.get(sfDir, "lineitem.parquet"))) "lineitem" else "range"
     def warmed(): SparkSession = {
       val spark = open()
       spark.range(1000000).selectExpr("sum(id)").collect()
-      Graft.table(spark, sfDir, "lineitem").count()
+      if (warmup == "lineitem") Graft.table(spark, sfDir, "lineitem").count()
       spark
     }
     var spark = if (fresh) null else warmed()
@@ -98,7 +105,7 @@ object Profile {
       def med(f: Work => AtomicLong) = median(rs.map(r => f(r._2).get))
       Gate(n, rs.map(_._1), med(_.jobs), med(_.stages), med(_.tasks))
     }
-    val json = toJson(gates, reps, fresh, sfDir,
+    val json = toJson(gates, reps, fresh, warmup, sfDir,
       spark.sparkContext.defaultParallelism)
     Files.write(out, json.getBytes(UTF_8))
     println(json)
@@ -127,14 +134,14 @@ object Profile {
 
   /** Per-gate maps `queries_median`/`queries_min` (seconds, -1.0 when a
     * run failed) and `jobs`/`stages`/`tasks` (per run), and `failed`. */
-  private def toJson(gates: Seq[Gate], reps: Int, fresh: Boolean, sfDir: String,
-      cpus: Int): String = {
+  private def toJson(gates: Seq[Gate], reps: Int, fresh: Boolean, warmup: String,
+      sfDir: String, cpus: Int): String = {
     def byGate(f: Gate => String): String =
       gates.map(g => s""""${g.name}":${f(g)}""").mkString("{", ",", "}")
     def secs(f: Seq[Double] => Double)(g: Gate): String =
       if (g.failed) "-1.0" else "%.4f".formatLocal(java.util.Locale.ROOT, f(g.seconds))
     val failed = gates.filter(_.failed).map(g => s""""${g.name}"""").mkString("[", ",", "]")
-    s"""{"metric":"profile","reps":$reps,"fresh":$fresh,""" +
+    s"""{"metric":"profile","reps":$reps,"fresh":$fresh,"warmup":"$warmup",""" +
       s""""stat":"median_of_$reps","queries_median":${byGate(secs(median(_)))},""" +
       s""""queries_min":${byGate(secs(_.min))},"jobs":${byGate(_.jobs.toString)},""" +
       s""""stages":${byGate(_.stages.toString)},"tasks":${byGate(_.tasks.toString)},""" +

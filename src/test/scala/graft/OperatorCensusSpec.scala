@@ -33,16 +33,24 @@ class OperatorCensusSpec extends AnyFunSuite {
       defPat.findFirstMatchIn(l).map(_.group(1))).toSeq
   }
 
-  /** Every main source file, as (file, its lines). */
-  private def mainSources: Seq[(java.io.File, Seq[String])] = {
+  /** Every Scala source under `root`, as (file, its lines). Read as
+    * UTF-8: grep takes a source holding a control byte for binary. */
+  private def sources(root: String): Seq[(java.io.File, Seq[String])] = {
     def scalaFiles(d: java.io.File): Seq[java.io.File] =
       d.listFiles.toSeq.flatMap(f =>
         if (f.isDirectory) scalaFiles(f)
         else if (f.getName.endsWith(".scala")) Seq(f) else Nil)
-    scalaFiles(new java.io.File("src/main")).map(f => f ->
+    scalaFiles(new java.io.File(root)).map(f => f ->
       new String(java.nio.file.Files.readAllBytes(f.toPath),
         java.nio.charset.StandardCharsets.UTF_8).linesIterator.toSeq)
   }
+
+  /** Every main source file, as (file, its lines). */
+  private def mainSources: Seq[(java.io.File, Seq[String])] = sources("src/main")
+
+  /** A main source's path under src/main/scala/graft. */
+  private def underGraft(f: java.io.File): String =
+    f.getPath.replace('\\', '/').stripPrefix("src/main/scala/graft/")
 
   test("operator census: source dir resolves from the test cwd") {
     assert(opsDir.isDirectory,
@@ -99,9 +107,10 @@ class OperatorCensusSpec extends AnyFunSuite {
 
   test("streams land in manifest tables only through ManifestSink") {
     // Fifteen hand-wired foreachBatch sinks once restated the
-    // exactly-once rule (commit under txn id <streamId>-<batchId>);
-    // every manifest landing now goes through streaming.ManifestSink.
-    val wiring = """\.foreachBatch\b|-\$batchId""".r
+    // exactly-once rule (commit under txn id <streamId>-<batchId>), and
+    // the monitor job wrote a plain parquet stream with no manifest;
+    // every stream in src/main now lands through streaming.ManifestSink.
+    val wiring = """\.foreachBatch\b|-\$batchId|\.writeStream\b""".r
     val sites = mainSources.filter(_._1.getName != "ManifestSink.scala")
       .flatMap { case (f, lines) =>
         lines.zipWithIndex.collect {
@@ -118,7 +127,7 @@ class OperatorCensusSpec extends AnyFunSuite {
     * under src/main/scala/graft is not in `allowed`. */
   private def strays(pat: scala.util.matching.Regex, allowed: Set[String]): Seq[String] =
     mainSources.flatMap { case (f, lines) =>
-      val path = f.getPath.replace('\\', '/').stripPrefix("src/main/scala/graft/")
+      val path = underGraft(f)
       val text = lines.mkString("\n")
       if (allowed(path)) Nil
       else pat.findAllMatchIn(text).map(m =>
@@ -141,6 +150,35 @@ class OperatorCensusSpec extends AnyFunSuite {
     assert(sites.isEmpty,
       s"SparkSession.builder() outside Graft, Bench, Verify and tools.Profile: " +
         sites.mkString(", "))
+  }
+
+  test("no top-level object member in src/main that nothing references") {
+    // Wrappers that only their own spec reached, and schemas nothing
+    // read, survived only because nothing asked for their deletion. A
+    // public def or val of a top-level object must be named, as a word
+    // on a code line other than its definition, somewhere in src/main,
+    // src/test or perfbench/src. Comment lines do not count; overrides
+    // are exempt (the member regex does not admit the modifier).
+    val comment = """^\s*(?://|/\*|\*)""".r
+    val word = """[A-Za-z_]\w*""".r
+    val uses = Seq("src/main", "src/test", "perfbench/src").flatMap(sources)
+      .flatMap(_._2).filter(comment.findPrefixOf(_).isEmpty)
+      .flatMap(word.findAllIn).groupMapReduce(identity)(_ => 1)(_ + _)
+    val topLevel =
+      """^(?:(?:private|protected|final|sealed|abstract|case|implicit)\S* )*(object|class|trait) """.r
+    val member = """^  (?:final |implicit |lazy |inline )*(?:def|val|var) ([A-Za-z_]\w*)""".r
+    val unused = mainSources.flatMap { case (f, lines) =>
+      var inObject = false
+      lines.zipWithIndex.flatMap { case (l, i) =>
+        topLevel.findPrefixMatchOf(l).foreach(m => inObject = m.group(1) == "object")
+        member.findPrefixMatchOf(l).map(_.group(1))
+          .filter(n => inObject && uses(n) == word.findAllIn(l).count(_ == n))
+          .map(n => s"${underGraft(f)}:${i + 1} $n")
+      }
+    }
+    assert(unused.isEmpty,
+      s"public object member(s) nothing references — delete them: " +
+        unused.mkString(", "))
   }
 
   test("no main source holds a raw NUL byte") {

@@ -55,6 +55,14 @@ class IncrementalSpec extends SparkSpec {
       (1L, Some(ts("2024-01-01 09:00:00"))),
       (2L, Some(ts("2024-01-01 11:00:00"))),
       (3L, None)))
+    // tieBreak == tsCol (no separate tie column) once selected `ts`
+    // twice and failed on the duplicate column.
+    val byTs = Incremental.asOfJoin(left, right, "dev", "ts", "ts", "asof")
+    assert(byTs.columns.toSeq == Seq("dev", "ts", "asof"))
+    assert(sortedRows(byTs) == Seq(
+      Seq("d1", ts("2024-01-01 10:00:00"), ts("2024-01-01 09:00:00")),
+      Seq("d1", ts("2024-01-01 12:00:00"), ts("2024-01-01 11:00:00")),
+      Seq("d2", ts("2024-01-01 12:00:00"), null)))
   }
 
   test("asOfJoin includes right rows at exactly the left timestamp (<= bound)") {

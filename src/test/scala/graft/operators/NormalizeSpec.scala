@@ -38,10 +38,4 @@ class NormalizeSpec extends SparkSpec {
     assert(rows(df).map(r => Option(r.getString(0))) ==
       Seq(Some("cleaning"), Some("unknown"), None))
   }
-
-  test("deltaClamp never negative (state_manager.py:71-74)") {
-    val df = Seq((10L, 3L), (3L, 10L), (5L, 5L)).toDF("cur", "last")
-      .select(Normalize.deltaClamp(col("cur"), col("last")).as("d"))
-    assert(rows(df).map(_.getLong(0)) == Seq(7L, 0L, 0L))
-  }
 }

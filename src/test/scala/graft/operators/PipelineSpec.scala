@@ -25,37 +25,10 @@ class PipelineSpec extends SparkSpec {
       ("2024-01-02", 1L, 0.0, 10.0, 0.0)))
   }
 
-  test("devicesWithNewWork filters to devices whose counter advanced (pipeline.py:505-513)") {
-    val cur = Seq(("d1", 12L), ("d2", 5L)).toDF("deviceName", "totalCleanCount")
-    val st = Seq(("d1", 10L), ("d2", 5L)).toDF("deviceName", "lastCleanCount")
-    val out = Pipeline.devicesWithNewWork(cur, st)
-    assert(rows(out).map(_.getString(0)) == Seq("d1"))
-    assert(rows(out).map(_.getAs[Long]("new_n")) == Seq(2L))
-  }
-
-  test("nextState snapshots current counters as the new watermark") {
-    val cur = Seq(("d1", 12L)).toDF("deviceName", "totalCleanCount")
-    val out = Pipeline.nextState(cur)
-    assert(out.columns.toSeq == Seq("deviceName", "lastCleanCount"))
-    assert(rows(out).head.getLong(1) == 12L)
-  }
-
   test("summaryConsistency flags devices whose snapshot disagrees with the log") {
     val summary = Seq(("d1", 2L), ("d2", 99L)).toDF("deviceName", "totalCleanCount")
     val out = Pipeline.summaryConsistency(records, summary)
     assert(rows(out).map(_.getString(0)) == Seq("d2"))
-  }
-
-  test("consumablesAsOfCleaning works with tieBreak == tsCol (regression: duplicate column)") {
-    val cleanings = Seq((ts("2024-01-02 10:00:00"), "d1"))
-      .toDF("timestamp", "deviceName")
-    val consumables = Seq(
-      (ts("2024-01-01 09:00:00"), "d1"),
-      (ts("2024-01-03 09:00:00"), "d1"))
-      .toDF("timestamp", "deviceName")
-    val out = Pipeline.consumablesAsOfCleaning(cleanings, consumables)
-    val r = rows(out).head
-    assert(r.getAs[Timestamp]("lastConsumablesTs") == ts("2024-01-01 09:00:00"))
   }
 
   test("periodRollup produces day/month/year subtotal levels") {

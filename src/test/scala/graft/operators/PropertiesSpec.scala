@@ -11,15 +11,6 @@ class PropertiesSpec extends SparkSpec {
 
   private val rnd = new scala.util.Random(42)
 
-  test("deltaClamp(cur, last) is never negative and bounded by cur") {
-    (1 to 1000).foreach { _ =>
-      val cur = rnd.nextLong(1000000)
-      val last = rnd.nextLong(1000000)
-      val d = math.max(0L, cur - last)
-      assert(d >= 0 && d <= cur)
-    }
-  }
-
   test("minhash similarity estimate tracks exact jaccard (random shuffled docs)") {
     val base = (1 to 40).map(i => s"tok$i")
     val docs = (0 until 8).map { i =>

@@ -100,6 +100,33 @@ class ManifestSinkSpec extends SparkSpec {
     assert(ManifestTable.committedTxns(spark, ivfBase) == Set("ann-0", "ann-1"))
   }
 
+  test("a stateful input's re-delivered batch is a sealed no-op too") {
+    // The streaming dedup's state stores must all commit on the replay,
+    // although its manifest commit writes nothing. Without watermark-only
+    // batches the last batch is the second data batch.
+    import spark.implicits._
+    val base = tmp("ms-dedup")
+    val ckpt = tmp("ms-dedup-ck")
+    val docs = MemoryStream[(Long, java.sql.Timestamp, String)](spark)
+    def at(t: String) = java.sql.Timestamp.valueOf(s"2024-01-01 $t")
+    val noData = "spark.sql.streaming.noDataMicroBatches.enabled"
+    val prev = spark.conf.getOption(noData)
+    spark.conf.set(noData, "false")
+    try assertReplayIsNoOp(ckpt, base, Seq("corpus"),
+      () => CorpusStream.manifestSink(
+        CorpusStream.dedupByContent(
+          docs.toDF().toDF("doc_id", "ts", "text"), "ts", "text"),
+        base, "corpus", "dd", ckpt).start(),
+      Seq(() => docs.addData((1L, at("10:00:00"), "alpha beta"),
+          (2L, at("10:01:00"), "gamma delta")),
+        () => docs.addData((3L, at("10:02:00"), "beta alpha"),
+          (4L, at("10:03:00"), "epsilon zeta"))))
+    finally prev.fold(spark.conf.unset(noData))(spark.conf.set(noData, _))
+    assert(ManifestTable.read(spark, base, "corpus").select("doc_id")
+      .as[Long].collect().sorted.toSeq == Seq(1L, 2L, 4L))
+    assert(ManifestTable.committedTxns(spark, base) == Set("dd-0", "dd-1"))
+  }
+
   test("kmvDistinctSink refuses k outside the sketch's bound before any " +
       "query starts") {
     import spark.implicits._

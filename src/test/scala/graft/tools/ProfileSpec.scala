@@ -50,9 +50,23 @@ class ProfileSpec extends SparkSpec {
     val tree = new ObjectMapper().readTree(json)
     assert(tree.get("reps").asInt == 2 && !tree.get("fresh").asBoolean)
     assert(tree.get("failed").size == 0 && tree.get("sf").asText == sf)
+    assert(tree.get("warmup").asText == "lineitem")
     for (field <- Seq("queries_median", "queries_min", "jobs", "stages", "tasks"))
       assert(gates.forall(g => tree.get(field).has(g)), field)
     rows.foreach(g => assert(tree.get("jobs").get(g.name).asLong == g.jobs))
+  }
+
+  test("a data dir without lineitem is warmed by the range step only") {
+    val dir = Files.createTempDirectory("profile-sf")
+    Files.createSymbolicLink(dir.resolve("events.parquet"),
+      java.nio.file.Paths.get(sf, "events.parquet"))
+    val out = dir.resolve("p.json")
+    val rows = Profile.profile(() => spark, fresh = false, dir.toString,
+      Seq("q01_daily_summary"), reps = 1, out)
+    assert(rows.map(_.name) == Seq("q01_daily_summary"))
+    assert(!rows.head.failed && rows.head.seconds.forall(_ > 0), rows)
+    val tree = new ObjectMapper().readTree(new String(Files.readAllBytes(out), "UTF-8"))
+    assert(tree.get("warmup").asText == "range" && tree.get("failed").size == 0)
   }
 
   test("a prefix that matches no gate is refused before a session is opened") {
